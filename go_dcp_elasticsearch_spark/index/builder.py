@@ -46,7 +46,6 @@ from pyspark.sql.types import (
 )
 
 from go_dcp_elasticsearch_spark.functions.bm25 import B, K1
-from go_dcp_elasticsearch_spark.functions.codec import encode_postings
 from go_dcp_elasticsearch_spark.functions.tokenizer import tokenize_py
 from go_dcp_elasticsearch_spark.plans.lineage import LineageLog
 from go_dcp_elasticsearch_spark.plans.metrics import MetricsLog
@@ -1372,14 +1371,14 @@ class IndexBuilder:
         try:
             from go_dcp_elasticsearch_spark.index import keymap as km_mod
             from go_dcp_elasticsearch_spark.sources.changes import (
-                _keymap_worth,
+                keymap_min_docs,
             )
 
             count = self.lineage.record_count()
             # below the keymap size threshold the applies use the plain
-            # metadata scan anyway (see changes._keymap_worth) — skip the
+            # metadata scan anyway (see changes.keymap_min_docs) — skip the
             # base write, it would never be consulted
-            if _keymap_worth(n_docs) and km_mod.valid_meta(
+            if n_docs >= keymap_min_docs() and km_mod.valid_meta(
                 self.spark, self.paths, ["repo", "path"], count
             ) is None:
                 # a fresh build's id/label bounds are known without a job:

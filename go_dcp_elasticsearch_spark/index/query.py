@@ -1,12 +1,14 @@
 """BM25 top-k retrieval over the sharded compressed index (SURVEY.md B9/B10).
 
-Two physical strategies, rank-identical results:
+Every query is a ``ClauseSpec`` (the ES ``bool`` shape: a match query is
+``should`` or ``must`` alone) served by one of two physical strategies,
+with bitwise-identical scores:
 
-1. ``topk_exact`` — declarative DataFrame path: decode candidate posting
-   blocks (Arrow UDF), broadcast-join tiny dictionary/stats, score with JVM
-   expressions, global ``orderBy(score desc, doc_id).limit(k)`` (Spark
-   executes TakeOrdered — per-partition heaps + driver merge, no full sort).
-   This path is the one mirrored 1:1 by the DuckDB oracle SQL.
+1. ``topk_exact`` — declarative DataFrame path (_exact_scored_bool): decode
+   candidate posting blocks (Arrow UDF), score with JVM expressions, global
+   ``orderBy(score desc, doc_id).limit(k)`` (Spark executes TakeOrdered —
+   per-partition heaps + driver merge, no full sort). This path is the one
+   mirrored 1:1 by the DuckDB oracle SQL.
 
 2. ``topk_pruned`` — shard-parallel block-max two-phase pruning (the
    MaxScore/Block-Max-WAND family): per shard, compute per-doc score UPPER
@@ -18,7 +20,8 @@ Two physical strategies, rank-identical results:
    score only docs with UB >= lambda. Sound (candidate set provably
    contains the true top-k) and exact. Each shard returns a local top-k;
    the global answer is the merge of n_shards * k rows — the Elasticsearch
-   shard-fan-in model the reference relies on implicitly.
+   shard-fan-in model the reference relies on implicitly. One kernel
+   (_make_spec_kernel) serves topk_pruned, topk_bool and topk_batch.
 
 Scale notes: query terms + dictionary rows + stats are O(query) and
 broadcast; the only large read is the postings scan, pruned by a
@@ -27,6 +30,10 @@ are written sorted by term within each shard partition).
 """
 
 from __future__ import annotations
+
+import operator
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -62,6 +69,32 @@ DECODED_SCHEMA = StructType(
     ]
 )
 
+# the postings columns the shard kernel reads
+_BLOCK_COLS = ("shard", "term", "seg", "block_id", "ids_vb", "tfs_vb",
+               "dls_vb", "max_tf", "min_dl")
+
+
+@dataclass(frozen=True)
+class ClauseSpec:
+    """One query in the ES ``bool`` shape, over analyzed terms: ``must``
+    and ``should`` terms score; a doc needs every ``must`` and every
+    ``filter`` term, at least one term of each ``terms`` group, at least
+    ``msm`` distinct ``should`` terms and no ``must_not`` term. ``after``
+    is the search_after cursor (score, doc_id). A disjunctive query is
+    ``should`` alone, a conjunctive one ``must`` alone."""
+
+    must: tuple = ()
+    should: tuple = ()
+    filter: tuple = ()
+    must_not: tuple = ()
+    terms: tuple = ()
+    msm: int = 0
+    after: tuple | None = None
+
+    def all_terms(self) -> set[str]:
+        return {*self.must, *self.should, *self.filter, *self.must_not,
+                *(t for grp in self.terms for t in grp)}
+
 
 class BM25Query:
     """Query handle over one index LAYOUT: n_docs/avgdl/shard salts are
@@ -95,7 +128,6 @@ class BM25Query:
         spark: SparkSession,
         index_dir: str,
         driver_dict_max_terms: int | None = None,
-        epoch_check_interval_sec: float = 0.0,
     ):
         from go_dcp_elasticsearch_spark.plans.lineage import LineageLog
 
@@ -107,40 +139,15 @@ class BM25Query:
             if driver_dict_max_terms is None
             else int(driver_dict_max_terms)
         )
-        # > 0 rate-limits the per-query epoch listing: freshness is then
-        # bounded by this window instead of exact-per-query. The default
-        # (0 = check every query) is right locally and on HDFS; on S3A at
-        # high QPS one LIST per query is real money and latency, and the
-        # reference's own sink serves bounded-staleness reads too (ES
-        # refresh_interval, default 1 s)
-        self.epoch_check_interval_sec = float(epoch_check_interval_sec)
-        self._last_epoch_check = 0.0
         self.refresh()
 
     def _current_epoch(self) -> int:
         return self._lineage_log.record_count()
 
     def _ensure_fresh(self) -> None:
-        """Re-snapshot if the index epoch moved (one FS listing, ~ms;
-        rate-limited to ``epoch_check_interval_sec`` when configured).
-
-        The TTL shortcut is DISABLED while the dictionary is served from
-        the executor-cache fallback (huge vocabularies): a maintenance op
-        completing inside the window rewrites the dictionary partitions,
-        and an evicted-then-recomputed persisted frame would read the
-        deleted files — exactly the FileNotFound hole the per-query
-        epoch check closes. The driver-side map has no such hazard (it
-        holds plain values), so bounded staleness there is safe."""
-        if (
-            self.epoch_check_interval_sec > 0
-            and getattr(self, "_df_map", None) is not None
-        ):
-            import time
-
-            now = time.monotonic()
-            if now - self._last_epoch_check < self.epoch_check_interval_sec:
-                return
-            self._last_epoch_check = now
+        """Re-snapshot if the index epoch moved: one FS listing (~ms)
+        before every query, so a query never serves epoch-cached
+        relations whose files a completed maintenance commit replaced."""
         if self._current_epoch() != self._epoch:
             self.refresh()
 
@@ -291,9 +298,6 @@ class BM25Query:
 
         salts = partition_salts(self.n_shards)
         return {shard: salts[shard] for shard in range(self.n_shards)}
-        # Block-max metadata is (max_tf, min_dl); the per-block tf_norm
-        # upper bound is computed HERE under the current avgdl — always
-        # sound regardless of how incremental updates shifted avgdl.
 
     # ---------- shared helpers ----------
 
@@ -443,7 +447,8 @@ class BM25Query:
         self, query: str, k: int = 10, mode: str = "any",
         after: tuple[float, int] | None = None,
     ) -> DataFrame:
-        """Exact BM25 top-k; JVM-side scoring, broadcast dictionary join.
+        """Exact BM25 top-k: JVM-side scoring (_exact_scored_bool) and a
+        global TakeOrdered; scores equal topk_pruned's bitwise.
 
         ``mode="any"`` (default) is the disjunctive BM25 top-k;
         ``mode="all"`` keeps only docs containing EVERY query term — the
@@ -455,42 +460,27 @@ class BM25Query:
         sort values of the LAST hit of the previous page; only hits
         strictly after it in (score desc, doc_id asc) order return. See
         AFTER_EPS for the tie tolerance."""
+        spec, idfs = self._match_spec(query, mode, after)
+        if spec is None:
+            return self.spark.createDataFrame([], schema="doc_id long, score double")
+        return self._exact_scored_bool(spec, idfs).orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(k)
+
+    def _match_spec(self, query: str, mode: str, after):
+        """(ClauseSpec, idfs) of a match query — ``should`` for
+        mode="any", ``must`` for mode="all" — or (None, {}) when the
+        result is provably empty (no terms; an "all" term absent)."""
         _check_mode(mode)
         _check_after(after)
         self._ensure_fresh()
         terms = self.analyze(query)
-        if not terms:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
-        idfs = self._term_stats(terms)
+        idfs = self._term_stats(terms) if terms else {}
         if not idfs or (mode == "all" and len(idfs) < len(terms)):
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
-        scored = self._exact_scored(idfs, len(terms) if mode == "all" else 0)
-        if after is not None:
-            scored = scored.filter(_after_cond(after))
-        return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-    def _exact_scored(self, idfs: dict[str, float], require_n: int) -> DataFrame:
-        """(doc_id, score) over EVERY matching doc — the exact-path scoring
-        frame shared by topk_exact and topk_phrase. ``require_n`` > 0 keeps
-        only docs matching that many distinct terms (conjunction as a
-        HAVING over the one-row-per-(term, doc) decode, not a re-scan)."""
-        idf_map = F.create_map(
-            *[x for t, w in sorted(idfs.items()) for x in (F.lit(t), F.lit(float(w)))]
-        )
-        postings = self.decoded_postings(list(idfs))
-        k1, b = F.lit(K1), F.lit(B)
-        contrib = idf_map[F.col("term")] * F.col("tf") / (
-            F.col("tf") + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.lit(self.avgdl))
-        )
-        scored = (
-            postings.withColumn("contrib", contrib)
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"),
-                 F.count("*").alias("_nt"))
-        )
-        if require_n:
-            scored = scored.filter(F.col("_nt") == require_n)
-        return scored.drop("_nt")
+            return None, {}
+        if mode == "all":
+            return ClauseSpec(must=tuple(terms), after=after), idfs
+        return ClauseSpec(should=tuple(sorted(idfs)), after=after), idfs
 
     def _per_shard(self, blocks: DataFrame, kernel, out_schema: str) -> DataFrame:
         """Run a per-shard kernel with EXACTLY one-ish shard per task.
@@ -544,27 +534,42 @@ class BM25Query:
         threshold lambda is taken over cursor-passing probe docs only —
         both bounds still dominate every passing doc's true score.
         Cursor ties use the AFTER_EPS tolerance (pruned and exact paths
-        agree on scores to well below it; ES compares the sort values it
+        return bitwise-equal scores; ES compares the sort values it
         itself returned, same contract)."""
-        _check_mode(mode)
-        _check_after(after)
-        self._ensure_fresh()
-        terms = self.analyze(query)
-        if not terms:
+        spec, idfs = self._match_spec(query, mode, after)
+        if spec is None:
             return self.spark.createDataFrame([], schema="doc_id long, score double")
-        idfs = self._term_stats(terms)
-        if not idfs or (mode == "all" and len(idfs) < len(terms)):
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
-        require_n = len(terms) if mode == "all" else 0
-        kernel = _make_shard_kernel(
-            idfs, self.avgdl, k, self._tomb, require_n, after=after
+        return self._spec_topk({0: spec}, idfs, k)
+
+    def _spec_topk(
+        self, specs: dict[int, ClauseSpec], idfs: dict[str, float], k: int,
+        chunk_size: int = 128, per_query: bool = False,
+    ) -> DataFrame:
+        """The pruned physical path for any batch of clause specs: one
+        postings scan over the union of their terms, one shard shuffle,
+        the spec kernel per shard, then the merge of the local top-k
+        rows. A single query merges with ``orderBy().limit()`` (global
+        TakeOrdered) into (doc_id, score); ``per_query`` keeps query_id
+        and takes each query's top-k with a window."""
+        from pyspark.sql import Window
+
+        terms = sorted(set().union(*(s.all_terms() for s in specs.values())))
+        kernel = _make_spec_kernel(
+            specs, idfs, self.avgdl, k, self._tomb, chunk_size
         )
-        blocks = self._candidate_blocks(list(idfs)).select(
-            "shard", "term", "seg", "block_id", "ids_vb", "tfs_vb", "dls_vb",
-            "max_tf", "min_dl"
+        blocks = self._candidate_blocks(terms).select(*_BLOCK_COLS)
+        local = self._per_shard(
+            blocks, kernel, "query_id long, doc_id long, score double"
         )
-        local = self._per_shard(blocks, kernel, "doc_id long, score double")
-        return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        order = (F.col("score").desc(), F.col("doc_id").asc())
+        if not per_query:
+            return local.select("doc_id", "score").orderBy(*order).limit(k)
+        w = Window.partitionBy("query_id").orderBy(*order)
+        return (
+            local.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+            .drop("_rn")
+        )
 
     # ---------- prefix retrieval (ES prefix / multi-term rewrite) ----------
 
@@ -767,13 +772,14 @@ class BM25Query:
         range: dict | None,
         op: str,
         terms_filter: dict | None = None,
-    ) -> dict:
+    ) -> tuple:
         """Shared clause parsing + validation for topk_bool/match_frame:
         analyze the four clause classes, reject degenerate combinations,
         resolve the ES minimum_should_match default (range counts as a
-        filter-context clause), resolve idf/df liveness. Returns a dict
-        with ``empty=True`` when the result is provably empty (dead must
-        term, unsatisfiable msm, dead filter term)."""
+        filter-context clause), resolve idf/df liveness. Returns
+        ``(spec, idfs, range predicate)``; spec is None when the result
+        is provably empty (dead must term, unsatisfiable msm, dead filter
+        term)."""
         self._ensure_fresh()
         for name, text in (("must", must), ("should", should)):
             bad = [w for w in (text or "").split() if ":" in w]
@@ -822,44 +828,31 @@ class BM25Query:
             ) else 0
         if msm < 0:
             raise ValueError(f"{op}: minimum_should_match {msm} < 0")
-        out = {
-            "m": m, "s": s, "n": n, "f": f, "msm": msm,
-            "rng_pred": rng_pred, "empty": False,
-            "idfs": {}, "live_s": [], "n_live": [], "groups": groups,
-        }
         if msm > len(s):
-            out["empty"] = True  # can never be satisfied
-            return out
+            return None, {}, rng_pred  # can never be satisfied
         idfs = self._term_stats(m + s)  # empty input -> {} but loads the dict
-        out["idfs"] = idfs
         if any(t not in idfs for t in m):
-            out["empty"] = True  # a must term absent from the whole corpus
-            return out
+            return None, {}, rng_pred  # a must term absent from the corpus
         live_s = [t for t in s if t in idfs]
-        out["live_s"] = live_s
         if len(live_s) < msm:
-            out["empty"] = True  # too few matchable should clauses left
-            return out
+            return None, {}, rng_pred  # too few matchable should clauses
         if self._df_map is not None:
-            n_live = [t for t in n if t in self._df_map]
-            f_dead = [t for t in f if t not in self._df_map]
-            live_groups = [
-                [t for t in grp if t in self._df_map] for grp in groups
-            ]
+            def live(t):
+                return t in self._df_map
         else:
-            n_live = [t for t in n if self._term_stats([t])]
-            f_dead = [t for t in f if not self._term_stats([t])]
-            live_groups = [
-                [t for t in grp if self._term_stats([t])] for grp in groups
-            ]
-        out["n_live"] = n_live
-        if f_dead:
-            out["empty"] = True  # a filter term absent from the whole corpus
-        if any(not grp for grp in live_groups):
-            # a terms group with NO live value can never be satisfied
-            out["empty"] = True
-        out["groups"] = live_groups
-        return out
+            def live(t):
+                return bool(self._term_stats([t]))
+        live_groups = [[t for t in grp if live(t)] for grp in groups]
+        if not all(live(t) for t in f) or not all(live_groups):
+            # a dead filter term, or a terms group with NO live value,
+            # can never be satisfied
+            return None, {}, rng_pred
+        spec = ClauseSpec(
+            must=tuple(m), should=tuple(live_s), filter=tuple(f),
+            must_not=tuple(t for t in n if live(t)),
+            terms=tuple(tuple(g) for g in live_groups), msm=msm,
+        )
+        return spec, idfs, rng_pred
 
     def match_frame(
         self,
@@ -899,42 +892,42 @@ class BM25Query:
             return self._docs_snapshot().select(
                 "doc_id", F.lit(0.0).alias("score")
             )
-        p = self._parse_bool(
+        spec, idfs, rng_pred = self._parse_bool(
             must, should, must_not, filter, minimum_should_match, range,
             op="match_frame", terms_filter=terms_filter,
         )
-        empty = self.spark.createDataFrame([], schema="doc_id long, score double")
-        if p["empty"]:
-            return empty
-        m, s, f = p["m"], p["s"], p["f"]
-        msm, idfs = p["msm"], p["idfs"]
-        live_s, n_live = p["live_s"], p["n_live"]
-        rng_pred, groups = p["rng_pred"], p["groups"]
+        if spec is None:
+            return self.spark.createDataFrame([], schema="doc_id long, score double")
+        return self._bool_frame(spec, idfs, rng_pred)
+
+    def _bool_frame(
+        self, spec: ClauseSpec, idfs: dict[str, float], rng_pred
+    ) -> DataFrame:
+        """(doc_id, score) of every doc matching a parsed bool query on
+        the exact path. A range clause is a column-pruned docs scan with
+        the bounds pushed into parquet, semi-joined on doc_id when some
+        posting-backed clause bounds the result; otherwise the range set
+        IS the filter-context universe (no must/filter/terms, msm 0):
+        every range doc qualifies at score 0.0, should clauses only
+        boost and must_not excludes via its id-streams — the ES
+        contract."""
         if rng_pred is None:
-            return self._exact_scored_bool(
-                idfs, m, live_s, n_live, msm, f, terms_groups=groups
+            return self._exact_scored_bool(spec, idfs)
+        rng_ids = self._docs_snapshot().filter(rng_pred).select("doc_id")
+        if spec.must or spec.filter or spec.msm or spec.terms:
+            return self._exact_scored_bool(spec, idfs).join(
+                rng_ids, "doc_id", "semi"
             )
-        rng_ids = (
-            self._docs_snapshot()
-            .filter(rng_pred)
-            .select("doc_id")
-        )
-        if m or f or msm > 0 or groups:
-            scored = self._exact_scored_bool(
-                idfs, m, live_s, n_live, msm, f, terms_groups=groups
-            )
-            return scored.join(rng_ids, "doc_id", "semi")
         hits = rng_ids
-        if n_live:
-            excl = self.decoded_postings(n_live).select("doc_id")
+        if spec.must_not:
+            excl = self.decoded_postings(list(spec.must_not)).select("doc_id")
             hits = hits.join(excl, "doc_id", "left_anti")
-        if live_s:
-            scored = self._exact_scored_bool(idfs, [], live_s, n_live, 0, [])
-            return hits.join(scored, "doc_id", "left").select(
-                "doc_id",
-                F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
-            )
-        return hits.select("doc_id", F.lit(0.0).alias("score"))
+        if not spec.should:
+            return hits.select("doc_id", F.lit(0.0).alias("score"))
+        scored = self._exact_scored_bool(ClauseSpec(should=spec.should), idfs)
+        return hits.join(scored, "doc_id", "left").select(
+            "doc_id", F.coalesce(F.col("score"), F.lit(0.0)).alias("score")
+        )
 
     def topk_bool(
         self,
@@ -1021,150 +1014,59 @@ class BM25Query:
                 f"topk_bool: unknown strategy {strategy!r} "
                 "(expected 'pruned' or 'exact')"
             )
-        p = self._parse_bool(
+        spec, idfs, rng_pred = self._parse_bool(
             must, should, must_not, filter, minimum_should_match, range,
             op="topk_bool", terms_filter=terms_filter,
         )
-        empty = self.spark.createDataFrame([], schema="doc_id long, score double")
-        if p["empty"]:
-            return empty
-        m, s, f = p["m"], p["s"], p["f"]
-        msm, idfs = p["msm"], p["idfs"]
-        live_s, n_live = p["live_s"], p["n_live"]
-        rng_pred, groups = p["rng_pred"], p["groups"]
-        if rng_pred is not None:
-            rng_ids = (
-                self._docs_snapshot()
-                .filter(rng_pred)
-                .select("doc_id")
-            )
-            if m or f or msm > 0 or groups:
-                # some posting-backed clause bounds the result: every
-                # qualifying doc has posting rows, so the scored frame is
-                # a superset and the range side semi-joins in
-                scored = self._exact_scored_bool(
-                    idfs, m, live_s, n_live, msm, f, terms_groups=groups
-                )
-                return (
-                    scored.join(rng_ids, "doc_id", "semi")
-                    .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                    .limit(k)
-                )
-            # filter-context universe IS the range set (no must/filter
-            # terms, msm 0): every range doc qualifies — should clauses
-            # only boost, must_not excludes via its id-streams — so
-            # score-0 docs surface too, the ES contract.
-            hits = rng_ids
-            if n_live:
-                excl = self.decoded_postings(n_live).select("doc_id")
-                hits = hits.join(excl, "doc_id", "left_anti")
-            if live_s:
-                scored = self._exact_scored_bool(
-                    idfs, [], live_s, n_live, 0, []
-                )
-                return (
-                    hits.join(scored, "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
-                    )
-                    .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                    .limit(k)
-                )
-            return (
-                hits.orderBy(F.col("doc_id").asc())
-                .limit(k)
-                .select("doc_id", F.lit(0.0).alias("score"))
-            )
-        if strategy == "exact":
-            scored = self._exact_scored_bool(
-                idfs, m, live_s, n_live, msm, f, terms_groups=groups
-            )
-            return scored.orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            ).limit(k)
-        kernel = _make_bool_shard_kernel(
-            idfs, m, live_s, n_live, msm, self.avgdl, k, self._tomb, filt=f,
-            terms_groups=groups,
-        )
-        group_terms = [t for grp in groups for t in grp]
-        blocks = self._candidate_blocks(
-            sorted(idfs) + n_live + f + group_terms
-        ).select(
-            "shard", "term", "seg", "block_id", "ids_vb", "tfs_vb", "dls_vb",
-            "max_tf", "min_dl"
-        )
-        local = self._per_shard(blocks, kernel, "doc_id long, score double")
-        return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        if spec is None:
+            return self.spark.createDataFrame([], schema="doc_id long, score double")
+        if rng_pred is None and strategy == "pruned":
+            return self._spec_topk({0: spec}, idfs, k)
+        return self._bool_frame(spec, idfs, rng_pred).orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(k)
 
     def _exact_scored_bool(
-        self,
-        idfs: dict[str, float],
-        must: list[str],
-        should: list[str],
-        must_not: list[str],
-        msm: int,
-        filt: list[str] | None = None,
-        terms_groups: list[list[str]] | None = None,
+        self, spec: ClauseSpec, idfs: dict[str, float]
     ) -> DataFrame:
-        """Declarative bool scoring: one decode pass over all clause
-        sets' postings, then a per-doc aggregate — score sums only
-        must+should contributions (filter/must_not terms carry weight 0
-        via the map miss), clause counts become HAVING-style filters. One
-        row per (term, doc) by construction, so count == distinct matched
-        terms. A filter-only call (empty idfs) yields constant 0.0
-        scores, the ES filter-context contract. ``terms_groups``: one
-        list of ``col:value`` tokens per ES ``terms`` query — the doc
-        must match AT LEAST ONE token per group (disjunctive within a
-        group, groups ANDed)."""
-        filt = filt or []
-        groups = terms_groups or []
-        cls_pairs = [(t, 0) for t in must] + [(t, 1) for t in should] + \
-            [(t, 2) for t in must_not] + [(t, 3) for t in filt] + \
-            [(t, 10 + gi) for gi, grp in enumerate(groups) for t in grp]
-        cls_map = F.create_map(
-            *[x for t, c in sorted(cls_pairs) for x in (F.lit(t), F.lit(c))]
-        )
-        postings = self.decoded_postings(sorted({t for t, _ in cls_pairs}))
-        k1, b = F.lit(K1), F.lit(B)
-        if idfs:
-            idf_map = F.create_map(
-                *[x for t, w in sorted(idfs.items())
-                  for x in (F.lit(t), F.lit(float(w)))]
-            )
-            weight = F.coalesce(idf_map[F.col("term")], F.lit(0.0))
-        else:
-            weight = F.lit(0.0)  # filter-only: ES filter-context score
-        contrib = weight * F.col("tf") / (
-            F.col("tf") + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.lit(self.avgdl))
-        )
-        cls = cls_map[F.col("term")]
-        aggs = [
-            F.sum("contrib").alias("score"),
-            F.sum((F.col("_cls") == 0).cast("int")).alias("_nm"),
-            F.sum((F.col("_cls") == 1).cast("int")).alias("_ns"),
-            F.sum((F.col("_cls") == 2).cast("int")).alias("_nn"),
-            F.sum((F.col("_cls") == 3).cast("int")).alias("_nf"),
-        ] + [
-            F.sum((F.col("_cls") == 10 + gi).cast("int")).alias(f"_g{gi}")
-            for gi in range(len(groups))
-        ]
-        cond = (
-            (F.col("_nm") == len(must))
-            & (F.col("_ns") >= msm)
-            & (F.col("_nn") == 0)
-            & (F.col("_nf") == len(filt))
-        )
-        for gi in range(len(groups)):
-            cond = cond & (F.col(f"_g{gi}") >= 1)
-        scored = (
-            postings.withColumn("contrib", contrib)
-            .withColumn("_cls", cls)
-            .groupBy("doc_id")
-            .agg(*aggs)
-            .filter(cond)
-        )
-        return scored.select("doc_id", "score")
+        """(doc_id, score) over EVERY doc matching ``spec`` — the exact
+        declarative scorer behind topk_exact, topk_phrase, match_frame
+        and the exact/range topk_bool. One decode pass over all clause
+        terms' postings, then one aggregate per doc with a column per
+        term: its tf_norm when the doc has the term, else null. Clause
+        membership becomes a filter over those columns (a filter-only
+        spec scores 0.0, the ES filter-context contract). The score adds
+        idf * tf_norm per scoring term in term-lexicographic order —
+        the order and arithmetic of the shard kernel and the oracles, so
+        the exact and pruned paths return bitwise-equal scores."""
+        terms = sorted(spec.all_terms())
+        col = {t: F.col(f"_t{i}") for i, t in enumerate(terms)}
+        tf, dl = F.col("tf"), F.col("dl")
+        tfn = tf / (tf + F.lit(K1) * (
+            F.lit(1.0) - F.lit(B) + F.lit(B) * dl / F.lit(self.avgdl)
+        ))
+        per_doc = self.decoded_postings(terms).groupBy("doc_id").agg(*[
+            F.max(F.when(F.col("term") == t, tfn)).alias(f"_t{i}")
+            for i, t in enumerate(terms)
+        ])
+        score = F.lit(0.0)
+        for t in sorted({*spec.must, *spec.should}):
+            score = score + F.coalesce(F.lit(float(idfs[t])) * col[t], F.lit(0.0))
+        has = {t: c.isNotNull() for t, c in col.items()}
+        cond = F.lit(True)
+        for t in (*spec.must, *spec.filter):
+            cond = cond & has[t]
+        for t in spec.must_not:
+            cond = cond & ~has[t]
+        for grp in spec.terms:
+            cond = cond & reduce(operator.or_, [has[t] for t in grp])
+        if spec.msm:
+            matched = sum(has[t].cast("int") for t in spec.should)
+            cond = cond & (matched >= spec.msm)
+        scored = per_doc.filter(cond).select("doc_id", score.alias("score"))
+        if spec.after is not None:
+            scored = scored.filter(_after_cond(spec.after))
+        return scored
 
     # ---------- search aggregations (ES aggs analogue) ----------
 
@@ -1564,7 +1466,7 @@ class BM25Query:
         idfs = self._term_stats(uniq)
         if len(idfs) < len(uniq):
             return empty  # a term absent from the corpus: no phrase match
-        scored = self._exact_scored(idfs, require_n=len(uniq))
+        scored = self._exact_scored_bool(ClauseSpec(must=tuple(uniq)), idfs)
         if source is None:
             return self._phrase_verify_positions(scored, seq, slop, k)
         meta = self._docs_snapshot().select(
@@ -1806,42 +1708,25 @@ class BM25Query:
         analogue of the reference's concurrent bulk requests
         (bulk.go:410-425) without N scans.
         """
-        from pyspark.sql import Window
-
         _check_mode(mode)
         self._ensure_fresh()
         qterms = {qid: self.analyze(qtext) for qid, qtext in queries}
         all_terms = sorted({t for ts in qterms.values() for t in ts})
-        if not all_terms:
+        idfs = self._term_stats(all_terms) if all_terms else {}
+        specs = {}
+        for qid, ts in qterms.items():
+            live = tuple(t for t in ts if t in idfs)
+            if not live:
+                continue
+            if mode == "any":
+                specs[qid] = ClauseSpec(should=live)
+            elif len(live) == len(ts):
+                # a query term absent from the whole corpus empties that
+                # query (ES bool.must); the rest of the batch proceeds
+                specs[qid] = ClauseSpec(must=live)
+        if not specs:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idfs = self._term_stats(all_terms)
-        live = {qid: [t for t in ts if t in idfs] for qid, ts in qterms.items()}
-        if mode == "all":
-            # a query term absent from the whole corpus empties that
-            # query (ES bool.must); the rest of the batch proceeds
-            live = {
-                qid: ts for qid, ts in live.items() if len(ts) == len(qterms[qid])
-            }
-        live = {qid: ts for qid, ts in live.items() if ts}
-        if not live:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        kernel = _make_batch_shard_kernel(
-            live, idfs, self.avgdl, k, chunk_size, self._tomb,
-            require_all=(mode == "all"),
-        )
-        blocks = self._candidate_blocks(sorted({t for ts in live.values() for t in ts})).select(
-            "shard", "term", "seg", "block_id", "ids_vb", "tfs_vb", "dls_vb",
-            "max_tf", "min_dl"
-        )
-        local = self._per_shard(blocks, kernel, "query_id long, doc_id long, score double")
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        return (
-            local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
+        return self._spec_topk(specs, idfs, k, chunk_size, per_query=True)
 
 
 def _span_near(toks: list[str], seq: list[str], slop: int) -> bool:
@@ -1899,12 +1784,12 @@ def _levenshtein_bounded(a: str, b: str, bound: int) -> int:
 
 # search_after tie tolerance: a cursor-passing doc either scores below
 # the cursor by more than this, or within it AND has a larger doc_id.
-# The pruned and exact paths compute BM25 in different float association
-# orders (numpy accumulation vs Spark SQL sum) and agree to ~1e-12 —
-# three orders below this — so a cursor taken from either path selects
-# the identical next page on both. ES compares the sort values it itself
-# returned; this is the same contract with the cross-path drift made
-# explicit.
+# The pruned and exact paths add the same per-term products in the same
+# (term-lexicographic) order and return bitwise-equal scores, so a cursor
+# taken from either path selects the identical next page on both; the
+# tolerance only lets a cursor score that lost digits on its way back
+# (printed, logged) still page correctly. ES likewise compares the sort
+# values it itself returned.
 AFTER_EPS = 1e-9
 
 
@@ -1959,40 +1844,62 @@ def _block_ub(max_tf: float, min_dl: float, avgdl: float) -> float:
     return max_tf / (max_tf + K1 * (1.0 - B + B * min_dl / avgdl))
 
 
-def _make_batch_shard_kernel(
-    qterms: dict[int, list[str]], idfs: dict[str, float], avgdl: float, k: int,
-    chunk_size: int = 128, tomb: "np.ndarray | None" = None,
-    require_all: bool = False,
+def _make_spec_kernel(
+    specs: dict[int, ClauseSpec], idfs: dict[str, float], avgdl: float,
+    k: int, tomb_ref: "np.ndarray | None" = None, chunk_size: int = 128,
 ):
-    """Multi-query per-shard kernel: decode each (term, block) id stream
-    ONCE per chunk, then run the two-phase UB/exact pruning per query over
-    the shared decode cache.
+    """The per-shard block-max kernel behind every pruned query: one
+    ``{query_id: ClauseSpec}`` batch in, local top-k rows
+    ``(query_id, doc_id, score)`` out. A single query is a batch of one.
 
-    Memory bound: queries are processed in chunks of ``chunk_size`` and
-    the decode caches are CLEARED between chunks, so executor memory is
-    bounded by the decoded postings of one chunk's term union — not the
-    whole batch's (a 256-query batch over a wide term set would otherwise
-    pin every touched tf/dl payload for the task's lifetime). Terms shared
-    across chunks are re-decoded; varbyte decode is numpy-vectorized and
-    far cheaper than the memory it would pin. Measured at 2M docs /
-    256-query batches: chunk 128 costs ~3% throughput vs unchunked
-    (9.2 vs 9.4 q/s) while halving the cache window; chunk 64 costs ~20%
-    — hence the 128 default."""
+    Per spec, Phase A decodes doc-id streams only and accumulates per-doc
+    UB = sum over matched must+should terms of idf_t * bound(max_tf,
+    min_dl, avgdl) of the block of t containing the doc (filter and
+    ``terms`` postings add 0 — they gate membership, never score), plus
+    per-clause match counts (one posting per (term, doc), so a count is
+    the number of distinct matched terms). Docs failing the clauses
+    (every must, every filter term, >= 1 per terms group, >= msm should,
+    no must_not) or tombstoned (delta segments) are dropped BEFORE
+    threshold selection, so a dead or failing doc neither surfaces nor
+    takes a top-k-by-UB slot. Phase B: lambda = kth largest exact score
+    among the top-k docs by UB; candidates = UB >= lambda, exact-scored
+    from tf/dl payloads decoded only for blocks overlapping them. Scores
+    accumulate in term-lexicographic order — the exact path
+    (_exact_scored_bool) and the oracles add in the same order, so all
+    agree bitwise. Filter-only specs score 0.0 and order by doc_id.
 
-    from go_dcp_elasticsearch_spark.index.segments import resolve_tomb
+    ``after`` (search_after cursor, see topk_pruned): every passing doc
+    scores <= cursor+eps, so UB is clamped to that cap (still an upper
+    bound for passing docs); lambda is the kth best score among
+    cursor-PASSING probe docs (fewer than k passing -> lambda 0, prune-
+    free fallback); the final mask drops non-passing candidates.
+
+    Memory bound: specs run in chunks of ``chunk_size`` and the decode
+    caches (id streams and tf/dl payloads per (term, seg, block)) are
+    shared within a chunk and CLEARED between chunks, so executor memory
+    is bounded by one chunk's decoded postings, not the whole batch's.
+    Measured at 2M docs / 256-query batches: chunk 128 costs ~3%
+    throughput vs unchunked while halving the cache window; chunk 64
+    costs ~20% — hence the 128 default."""
+    from go_dcp_elasticsearch_spark.index.segments import (
+        drop_tombstoned,
+        resolve_tomb,
+    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tomb_arr = resolve_tomb(tomb)
+        tomb = resolve_tomb(tomb_ref)
         per_term: dict[str, list] = {}
-        decoded_ids: dict[tuple[str, int], np.ndarray] = {}
-        payload: dict[tuple[str, int], tuple[np.ndarray, np.ndarray]] = {}
+        for row in pdf.itertuples(index=False):
+            per_term.setdefault(row.term, []).append(row)
+        ids_cache: dict[tuple, np.ndarray] = {}
+        payload: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
 
         def ids_of(t, row):
             key = (t, row.seg, row.block_id)
-            if key not in decoded_ids:
+            if key not in ids_cache:
                 gaps = varbyte_decode(bytes(row.ids_vb))
-                decoded_ids[key] = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-            return decoded_ids[key]
+                ids_cache[key] = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
+            return ids_cache[key]
 
         def tfs_dls_of(t, row):
             key = (t, row.seg, row.block_id)
@@ -2003,403 +1910,121 @@ def _make_batch_shard_kernel(
                 )
             return payload[key]
 
-        for row in pdf.itertuples(index=False):
-            per_term.setdefault(row.term, []).append(row)
+        def run(spec: ClauseSpec):
+            scoring = sorted({*spec.must, *spec.should})
+            must = set(spec.must)
+            # clause classes: 0 = must, 1 = should, 2+g = gate g (one
+            # per filter term, one per terms group; >= 1 match each)
+            gates = [[t] for t in spec.filter] + [list(g) for g in spec.terms]
+            ids_l, ub_l, cls_l = [], [], []
+
+            def add(t, row, u, c):
+                ids = ids_of(t, row)
+                ids_l.append(ids)
+                ub_l.append(np.full(len(ids), u))
+                cls_l.append(np.full(len(ids), c, dtype=np.int32))
+
+            for t in scoring:
+                for row in per_term.get(t, ()):
+                    u = idfs[t] * _block_ub(row.max_tf, row.min_dl, avgdl)
+                    add(t, row, u, 0 if t in must else 1)
+            for g, grp in enumerate(gates):
+                for t in grp:
+                    for row in per_term.get(t, ()):
+                        add(t, row, 0.0, 2 + g)
+            if not ids_l:
+                return None
+            uniq, inv = np.unique(np.concatenate(ids_l), return_inverse=True)
+            ub = np.zeros(len(uniq))
+            np.add.at(ub, inv, np.concatenate(ub_l))
+            cls = np.concatenate(cls_l)
+
+            def hits(c):
+                return np.bincount(inv[cls == c], minlength=len(uniq))
+
+            keep = np.ones(len(uniq), dtype=bool)
+            if must:
+                keep &= hits(0) == len(must)
+            if spec.msm:
+                keep &= hits(1) >= spec.msm
+            for g in range(len(gates)):
+                keep &= hits(2 + g) >= 1
+            excl = [ids_of(t, row) for t in spec.must_not
+                    for row in per_term.get(t, ())]
+            if excl:
+                keep &= drop_tombstoned(uniq, np.unique(np.concatenate(excl)))
+            if tomb is not None and len(tomb):
+                keep &= drop_tombstoned(uniq, tomb)
+            uniq, ub = uniq[keep], ub[keep]
+            if not len(uniq):
+                return None
+            after = spec.after
+            if after is not None:
+                ub = np.minimum(ub, float(after[0]) + AFTER_EPS)
+
+            def exact_scores(docs: np.ndarray) -> np.ndarray:
+                """Exact BM25 for a sorted doc_id subset (term-lex order)."""
+                scores = np.zeros(len(docs))
+                for t in scoring:
+                    for row in per_term.get(t, ()):
+                        ids = ids_of(t, row)
+                        # skip a block no candidate overlaps
+                        lo = np.searchsorted(docs, ids[0])
+                        hi = np.searchsorted(docs, ids[-1], side="right")
+                        if lo == hi:
+                            continue
+                        tfs, dls = tfs_dls_of(t, row)
+                        pos = np.searchsorted(docs, ids)
+                        mask = (pos < len(docs)) & (
+                            docs[np.minimum(pos, len(docs) - 1)] == ids
+                        )
+                        tfn = tfs[mask] / (
+                            tfs[mask] + K1 * (1.0 - B + B * dls[mask] / avgdl)
+                        )
+                        scores[pos[mask]] += idfs[t] * tfn
+                return scores
+
+            if len(uniq) <= k:
+                cand = uniq
+            else:
+                top_by_ub = uniq[np.argsort(-ub)[:k]]
+                top_by_ub.sort()
+                lam_scores = exact_scores(top_by_ub)
+                if after is not None:
+                    # lambda must come from cursor-PASSING docs only — a
+                    # non-passing probe's high score would prune the very
+                    # docs this page wants
+                    lam_scores = lam_scores[
+                        _after_mask(lam_scores, top_by_ub, after)
+                    ]
+                lam = np.sort(lam_scores)[-k] if len(lam_scores) >= k else 0.0
+                cand = uniq[ub >= lam - 1e-12]
+            cand = np.sort(cand)
+            sc = exact_scores(cand)
+            if after is not None:
+                pass_m = _after_mask(sc, cand, after)
+                cand, sc = cand[pass_m], sc[pass_m]
+            order = np.lexsort((cand, -sc))[:k]
+            return cand[order], sc[order]
 
         out_q, out_d, out_s = [], [], []
-        qids = list(qterms)
-        for chunk_start in range(0, len(qids), chunk_size):
-            if chunk_start:
-                decoded_ids.clear()
+        qids = list(specs)
+        for start in range(0, len(qids), chunk_size):
+            if start:
+                ids_cache.clear()
                 payload.clear()
-            _run_chunk(
-                qids[chunk_start : chunk_start + chunk_size], qterms, idfs,
-                avgdl, k, per_term, ids_of, tfs_dls_of, out_q, out_d, out_s,
-                tomb_arr, require_all,
-            )
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    return kernel
-
-
-def _run_chunk(chunk_qids, qterms, idfs, avgdl, k, per_term, ids_of,
-               tfs_dls_of, out_q, out_d, out_s, tomb=None,
-               require_all=False):
-    """Score one chunk of queries against a shard's blocks (shared decode
-    caches via ids_of/tfs_dls_of). ``tomb``: sorted tombstoned doc_ids
-    (delta segments) excluded from candidates BEFORE threshold selection
-    — a dead doc must neither surface nor consume a top-k-by-UB slot."""
-    import numpy as np  # noqa: F811 (kernel runs on executors)
-
-    from go_dcp_elasticsearch_spark.index.segments import drop_tombstoned
-
-    for qid in chunk_qids:
-        terms_all = qterms[qid]
-        terms_here = [t for t in sorted(set(terms_all)) if t in per_term]
-        if not terms_here:
-            continue
-        all_ids, all_ubs = [], []
-        for t in terms_here:
-            w = idfs[t]
-            for row in per_term[t]:
-                ids = ids_of(t, row)
-                all_ids.append(ids)
-                all_ubs.append(
-                    np.full(len(ids), w * _block_ub(row.max_tf, row.min_dl, avgdl))
-                )
-        ids_cat = np.concatenate(all_ids)
-        ubs_cat = np.concatenate(all_ubs)
-        uniq, inv = np.unique(ids_cat, return_inverse=True)
-        ub = np.zeros(len(uniq))
-        np.add.at(ub, inv, ubs_cat)
-        if require_all:
-            # one (term, posting) hit per (term, doc): the hit count per
-            # doc equals its distinct matched terms; every query term must
-            # match (qterms lists are unique; per-shard absence of a term
-            # simply empties the shard's contribution)
-            cnt = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt, inv, 1)
-            conj = cnt == len(terms_all)
-            uniq, ub = uniq[conj], ub[conj]
-            if not len(uniq):
-                continue
-        if tomb is not None and len(tomb):
-            keep = drop_tombstoned(uniq, tomb)
-            uniq, ub = uniq[keep], ub[keep]
-            if not len(uniq):
-                continue
-
-        def exact_scores(doc_subset: np.ndarray) -> np.ndarray:
-            scores = np.zeros(len(doc_subset))
-            for t in terms_here:
-                w = idfs[t]
-                for row in per_term[t]:
-                    ids = ids_of(t, row)
-                    lo = np.searchsorted(doc_subset, ids[0])
-                    hi = np.searchsorted(doc_subset, ids[-1], side="right")
-                    if lo == hi:
-                        continue
-                    tfs, dls = tfs_dls_of(t, row)
-                    pos = np.searchsorted(doc_subset, ids)
-                    mask = (pos < len(doc_subset)) & (
-                        doc_subset[np.minimum(pos, len(doc_subset) - 1)] == ids
-                    )
-                    tfn = tfs[mask] / (
-                        tfs[mask] + K1 * (1.0 - B + B * dls[mask] / avgdl)
-                    )
-                    scores[pos[mask]] += w * tfn
-            return scores
-
-        if len(uniq) <= k:
-            cand = uniq
-        else:
-            top_by_ub = uniq[np.argsort(-ub)[:k]]
-            top_by_ub.sort()
-            lam_scores = exact_scores(top_by_ub)
-            lam = np.sort(lam_scores)[-k] if len(lam_scores) >= k else 0.0
-            cand = uniq[ub >= lam - 1e-12]
-        cand = np.sort(cand)
-        sc = exact_scores(cand)
-        order = np.lexsort((cand, -sc))[:k]
-        out_q.extend([qid] * len(order))
-        out_d.extend(cand[order].tolist())
-        out_s.extend(sc[order].tolist())
-
-
-def _make_bool_shard_kernel(
-    idfs: dict[str, float],
-    must: list[str],
-    should: list[str],
-    must_not: list[str],
-    msm: int,
-    avgdl: float,
-    k: int,
-    tomb_ref: "np.ndarray | None" = None,
-    filt: list[str] | None = None,
-    terms_groups: list[list[str]] | None = None,
-):
-    """Per-shard kernel for the ES ``bool`` query (see BM25Query.topk_bool).
-
-    Same two-phase block-max shape as _make_shard_kernel, generalized:
-    Phase A decodes the id streams of the scoring terms (must+should)
-    AND the filter terms (UB contribution 0 — they gate membership, not
-    score), accumulating per-doc UB plus per-clause-class match counts
-    (one posting per (term, doc), so the count equals distinct matched
-    terms of that class); docs failing n_must == |must|, n_filter ==
-    |filter| or n_should >= msm are dropped BEFORE threshold selection,
-    keeping the pruning sound on the reduced set. filter and must_not
-    tf/dl payloads are never touched. A shard missing one of the
-    must/filter terms contributes nothing (the count can never reach the
-    requirement), mirroring the conjunctive kernel. Filter-only queries
-    (empty idfs) yield constant 0.0 scores ordered by doc_id."""
-    from go_dcp_elasticsearch_spark.index.segments import (
-        drop_tombstoned,
-        resolve_tomb,
-    )
-
-    filt = filt or []
-    groups = terms_groups or []
-    scoring_sorted = sorted(idfs)
-    must_set = set(must)
-    n_must = len(must)
-    n_filt = len(filt)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []})
-        tomb = resolve_tomb(tomb_ref)
-        per_term: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            per_term.setdefault(row.term, []).append(row)
-        # Phase A: ids + per-posting UB + clause-class of each posting
-        all_ids, all_ubs, all_cls = [], [], []
-        decoded = {}
-        for t in scoring_sorted:
-            if t not in per_term:
-                continue
-            w = idfs[t]
-            c = 0 if t in must_set else 1
-            for row in per_term[t]:
-                gaps = varbyte_decode(bytes(row.ids_vb))
-                ids = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-                decoded[(t, row.seg, row.block_id)] = (ids, row)
-                all_ids.append(ids)
-                all_ubs.append(
-                    np.full(len(ids), w * _block_ub(row.max_tf, row.min_dl, avgdl))
-                )
-                all_cls.append(np.full(len(ids), c, dtype=np.int8))
-        for t in filt:
-            for row in per_term.get(t, []):
-                gaps = varbyte_decode(bytes(row.ids_vb))
-                ids = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-                all_ids.append(ids)
-                all_ubs.append(np.zeros(len(ids)))
-                all_cls.append(np.full(len(ids), 3, dtype=np.int8))
-        # terms groups (ES `terms` query): id-streams only, UB 0, one
-        # clause class per group (>= 1 match required within each)
-        for gi, grp in enumerate(groups):
-            for t in grp:
-                for row in per_term.get(t, []):
-                    gaps = varbyte_decode(bytes(row.ids_vb))
-                    ids = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-                    all_ids.append(ids)
-                    all_ubs.append(np.zeros(len(ids)))
-                    all_cls.append(np.full(len(ids), 10 + gi, dtype=np.int16))
-        if not all_ids:
-            return empty
-        ids_cat = np.concatenate(all_ids)
-        ubs_cat = np.concatenate(all_ubs)
-        cls_cat = np.concatenate(all_cls)
-        uniq, inv = np.unique(ids_cat, return_inverse=True)
-        ub = np.zeros(len(uniq))
-        np.add.at(ub, inv, ubs_cat)
-        keep = np.ones(len(uniq), dtype=bool)
-        if n_must:
-            cnt_m = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt_m, inv[cls_cat == 0], 1)
-            keep &= cnt_m == n_must
-        if msm:
-            cnt_s = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt_s, inv[cls_cat == 1], 1)
-            keep &= cnt_s >= msm
-        if n_filt:
-            cnt_f = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt_f, inv[cls_cat == 3], 1)
-            keep &= cnt_f == n_filt
-        for gi in range(len(groups)):
-            cnt_g = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt_g, inv[cls_cat == 10 + gi], 1)
-            keep &= cnt_g >= 1
-        uniq, ub = uniq[keep], ub[keep]
-        if not len(uniq):
-            return empty
-        # must_not exclusion: id streams only, payloads never decoded
-        excl_parts = []
-        for t in must_not:
-            for row in per_term.get(t, []):
-                gaps = varbyte_decode(bytes(row.ids_vb))
-                excl_parts.append(np.cumsum(gaps, dtype=np.uint64).astype(np.int64))
-        if excl_parts:
-            excl = np.unique(np.concatenate(excl_parts))
-            keep = drop_tombstoned(uniq, excl)
-            uniq, ub = uniq[keep], ub[keep]
-            if not len(uniq):
-                return empty
-        if tomb is not None and len(tomb):
-            keep = drop_tombstoned(uniq, tomb)
-            uniq, ub = uniq[keep], ub[keep]
-            if not len(uniq):
-                return empty
-
-        def exact_scores(doc_subset: np.ndarray) -> np.ndarray:
-            scores = np.zeros(len(doc_subset))
-            for t in scoring_sorted:
-                if t not in per_term:
-                    continue
-                w = idfs[t]
-                for row in per_term[t]:
-                    ids, r = decoded[(t, row.seg, row.block_id)]
-                    lo = np.searchsorted(doc_subset, ids[0])
-                    hi = np.searchsorted(doc_subset, ids[-1], side="right")
-                    if lo == hi:
-                        continue
-                    tfs = varbyte_decode(bytes(r.tfs_vb)).astype(np.float64)
-                    dls = varbyte_decode(bytes(r.dls_vb)).astype(np.float64)
-                    pos = np.searchsorted(doc_subset, ids)
-                    mask = (pos < len(doc_subset)) & (
-                        doc_subset[np.minimum(pos, len(doc_subset) - 1)] == ids
-                    )
-                    tfn = tfs[mask] / (
-                        tfs[mask] + K1 * (1.0 - B + B * dls[mask] / avgdl)
-                    )
-                    scores[pos[mask]] += w * tfn
-            return scores
-
-        if len(uniq) <= k:
-            cand = uniq
-        else:
-            top_by_ub = uniq[np.argsort(-ub)[:k]]
-            top_by_ub.sort()
-            lam_scores = exact_scores(top_by_ub)
-            lam = np.sort(lam_scores)[-k] if len(lam_scores) >= k else 0.0
-            cand = uniq[ub >= lam - 1e-12]
-        cand = np.sort(cand)
-        sc = exact_scores(cand)
-        order = np.lexsort((cand, -sc))[:k]
-        return pd.DataFrame({"doc_id": cand[order], "score": sc[order]})
-
-    return kernel
-
-
-def _make_shard_kernel(
-    idfs: dict[str, float], avgdl: float, k: int,
-    tomb_ref: "np.ndarray | None" = None, require_n: int = 0,
-    after: tuple[float, int] | None = None,
-):
-    """Build the per-shard numpy kernel (runs inside applyInPandas).
-
-    Phase A: decode doc-id streams only; per-doc UB = sum_t idf_t *
-    bound(max_tf, min_dl, avgdl) of the block of t containing doc.
-    Phase B: lambda = kth
-    largest exact score among the top-k docs by UB; candidates = UB >=
-    lambda; exact-score candidates from tf/dl payloads (decoded lazily only
-    for blocks that contain a candidate).
-
-    ``tomb``: sorted tombstoned doc_ids from pending delta segments,
-    removed from the candidate universe before threshold selection (a
-    dead doc must neither surface nor consume a top-k-by-UB slot).
-    ``require_n`` > 0 = conjunctive mode: only docs matched by exactly
-    ``require_n`` (term, posting) hits survive — one hit per (term, doc)
-    by construction, so the count equals the number of distinct matched
-    terms; filtered BEFORE threshold selection, which keeps the pruning
-    sound on the reduced candidate set.
-    ``after``: search_after cursor (see topk_pruned). Soundness under a
-    cursor: every passing doc scores <= cursor+eps, so UB is clamped to
-    that cap (still an upper bound for passing docs); lambda is the kth
-    best score among cursor-PASSING probe docs (fewer than k passing →
-    lambda 0, prune-free fallback); the final mask drops non-passing
-    candidates before selection.
-    """
-    from go_dcp_elasticsearch_spark.index.segments import (
-        drop_tombstoned,
-        resolve_tomb,
-    )
-
-    terms_sorted = sorted(idfs)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tomb = resolve_tomb(tomb_ref)
-        # organize blocks per term
-        per_term: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            per_term.setdefault(row.term, []).append(row)
-        # Phase A: ids + per-posting UB
-        all_ids = []
-        all_ubs = []
-        decoded = {}  # (term, seg, block_id) -> (ids, row); tf/dl lazy
-        for t in terms_sorted:
-            if t not in per_term:
-                continue
-            w = idfs[t]
-            for row in per_term[t]:
-                gaps = varbyte_decode(bytes(row.ids_vb))
-                ids = np.cumsum(gaps, dtype=np.uint64).astype(np.int64)
-                decoded[(t, row.seg, row.block_id)] = (ids, row)
-                all_ids.append(ids)
-                all_ubs.append(
-                    np.full(len(ids), w * _block_ub(row.max_tf, row.min_dl, avgdl))
-                )
-        if not all_ids:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        ids_cat = np.concatenate(all_ids)
-        ubs_cat = np.concatenate(all_ubs)
-        uniq, inv = np.unique(ids_cat, return_inverse=True)
-        ub = np.zeros(len(uniq))
-        np.add.at(ub, inv, ubs_cat)
-        if require_n:
-            cnt = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt, inv, 1)
-            conj = cnt == require_n
-            uniq, ub = uniq[conj], ub[conj]
-            if not len(uniq):
-                return pd.DataFrame({"doc_id": [], "score": []})
-        if tomb is not None and len(tomb):
-            keep = drop_tombstoned(uniq, tomb)
-            uniq, ub = uniq[keep], ub[keep]
-            if not len(uniq):
-                return pd.DataFrame({"doc_id": [], "score": []})
-        if after is not None:
-            # a cursor-passing doc's score is <= cursor+eps: clamping UB
-            # to that cap keeps it an upper bound for every passing doc
-            # and lets blocks far above the cursor stop inflating probes
-            ub = np.minimum(ub, float(after[0]) + AFTER_EPS)
-
-        def exact_scores(doc_subset: np.ndarray) -> np.ndarray:
-            """Exact BM25 for a sorted doc_id subset (term-lex accumulation)."""
-            scores = np.zeros(len(doc_subset))
-            for t in terms_sorted:
-                if t not in per_term:
-                    continue
-                w = idfs[t]
-                for row in per_term[t]:
-                    ids, r = decoded[(t, row.seg, row.block_id)]
-                    # skip block if no candidate overlaps its range
-                    lo = np.searchsorted(doc_subset, ids[0])
-                    hi = np.searchsorted(doc_subset, ids[-1], side="right")
-                    if lo == hi:
-                        continue
-                    tfs = varbyte_decode(bytes(r.tfs_vb)).astype(np.float64)
-                    dls = varbyte_decode(bytes(r.dls_vb)).astype(np.float64)
-                    pos = np.searchsorted(doc_subset, ids)
-                    mask = (pos < len(doc_subset)) & (
-                        doc_subset[np.minimum(pos, len(doc_subset) - 1)] == ids
-                    )
-                    tfn = tfs[mask] / (
-                        tfs[mask] + K1 * (1.0 - B + B * dls[mask] / avgdl)
-                    )
-                    scores[pos[mask]] += w * tfn
-            return scores
-
-        # Phase B: threshold from top-k by UB, then candidates
-        if len(uniq) <= k:
-            cand = uniq
-        else:
-            top_by_ub = uniq[np.argsort(-ub)[:k]]
-            top_by_ub.sort()
-            lam_scores = exact_scores(top_by_ub)
-            if after is not None:
-                # lambda must come from cursor-PASSING docs only — a
-                # non-passing probe's high score would prune the very
-                # docs this page wants
-                pass_m = _after_mask(lam_scores, top_by_ub, after)
-                lam_scores = lam_scores[pass_m]
-            lam = np.sort(lam_scores)[-k] if len(lam_scores) >= k else 0.0
-            cand = uniq[ub >= lam - 1e-12]
-        cand = np.sort(cand)
-        sc = exact_scores(cand)
-        if after is not None:
-            pass_m = _after_mask(sc, cand, after)
-            cand, sc = cand[pass_m], sc[pass_m]
-        order = np.lexsort((cand, -sc))[:k]
-        return pd.DataFrame({"doc_id": cand[order], "score": sc[order]})
+            for qid in qids[start : start + chunk_size]:
+                hit = run(specs[qid])
+                if hit is not None:
+                    out_q.append(np.full(len(hit[0]), qid, dtype=np.int64))
+                    out_d.append(hit[0])
+                    out_s.append(hit[1])
+        if not out_q:
+            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+        return pd.DataFrame({
+            "query_id": np.concatenate(out_q),
+            "doc_id": np.concatenate(out_d),
+            "score": np.concatenate(out_s),
+        })
 
     return kernel

@@ -368,6 +368,11 @@ def ngram_jaccard_pairs(
     )
 
 
+# dedup_clusters' driver-side cap: a candidate graph whose pairs and nodes
+# each fit in this many rows is solved on the driver
+SMALL_GRAPH_MAX = 200_000
+
+
 def dedup_clusters(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -396,20 +401,19 @@ def dedup_clusters(
     # r7 small-graph fast path: near-dup candidate graphs are tiny next to
     # the corpus (the whole point of LSH), and each propagation round costs
     # two fixed-overhead Spark jobs. When BOTH the pairs and the node list
-    # fit a driver cap (default 200k rows, SPARK_GRAFT_SMALL_GRAPH_MAX),
-    # the components are computed driver-side with the IDENTICAL contract:
+    # fit a driver cap (SMALL_GRAPH_MAX rows), the components are
+    # computed driver-side with the IDENTICAL contract:
     # cluster_id = min reachable id, and the max_iters rail still raises
     # when min-label propagation would not have converged in max_iters
     # rounds (a component converges in ecc+1 rounds, where ecc is the max
     # BFS distance from its min-id node). Big graphs keep the distributed
     # loop unchanged.
-    import os as _os
-
-    cap = int(_os.environ.get("SPARK_GRAFT_SMALL_GRAPH_MAX", "200000"))
-    edge_rows = pairs.select("id_a", "id_b").limit(cap + 1).collect()
-    if len(edge_rows) <= cap:
-        node_rows = nodes.select(F.col(id_col).alias("id")).limit(cap + 1).collect()
-        if len(node_rows) <= cap:
+    edge_rows = pairs.select("id_a", "id_b").limit(SMALL_GRAPH_MAX + 1).collect()
+    if len(edge_rows) <= SMALL_GRAPH_MAX:
+        node_rows = (
+            nodes.select(F.col(id_col).alias("id")).limit(SMALL_GRAPH_MAX + 1).collect()
+        )
+        if len(node_rows) <= SMALL_GRAPH_MAX:
             return _dedup_clusters_driver(
                 nodes, id_col, node_rows, edge_rows, max_iters
             )

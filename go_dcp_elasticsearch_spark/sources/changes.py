@@ -398,13 +398,26 @@ BROADCAST_DELTA_KEYS_MAX = 2_000_000
 # (dead ids) — a big corpus can never be misrouted to the full scan.
 KEYMAP_MIN_DOCS_DEFAULT = 200_000
 
+# the delta apply's driver-side bookkeeping cap: a joined feed of at most
+# this many rows is collected once and counted on the driver
+SMALL_DELTA_MAX = 100_000
 
-def _keymap_worth(approx_docs: int) -> bool:
+
+def keymap_min_docs() -> int:
+    """The keymap size threshold: ``SPARK_GRAFT_KEYMAP_MIN_DOCS`` when
+    set, else KEYMAP_MIN_DOCS_DEFAULT. Read once per operation, before
+    its first write; a malformed value raises ValueError there."""
     import os as _os
 
-    return int(approx_docs) >= int(
-        _os.environ.get("SPARK_GRAFT_KEYMAP_MIN_DOCS", KEYMAP_MIN_DOCS_DEFAULT)
-    )
+    raw = _os.environ.get("SPARK_GRAFT_KEYMAP_MIN_DOCS")
+    if raw is None:
+        return KEYMAP_MIN_DOCS_DEFAULT
+    if not raw.strip().isdigit():
+        raise ValueError(
+            "SPARK_GRAFT_KEYMAP_MIN_DOCS must be a non-negative integer, "
+            f"got {raw!r}"
+        )
+    return int(raw)
 
 
 def apply_changes_to_index(
@@ -489,11 +502,12 @@ def apply_changes_to_index(
 
     if strategy not in ("rebuild", "delta", "auto"):
         raise ValueError(f"apply_changes_to_index: unknown strategy {strategy!r}")
+    km_min = keymap_min_docs()
     trace = _phase_tracer("rebuild")
     key_cols = list(key_cols)
     if strategy == "delta":
         return _apply_changes_delta(
-            spark, index_dir, new_corpus, changes, key_cols, order_col
+            spark, index_dir, new_corpus, changes, key_cols, order_col, km_min
         )
     if strategy == "auto":
         # scatter probe over the LIVE view (works with pending segments;
@@ -519,7 +533,7 @@ def apply_changes_to_index(
         )
         if (
             kmeta_probe is not None
-            and _keymap_worth(int(kmeta_probe["max_doc_id"]) + 1)
+            and int(kmeta_probe["max_doc_id"]) + 1 >= km_min
             and _exists(spark, paths_probe.stats_shards)
         ):
             partials_probe = read_stats_partials(spark, paths_probe)
@@ -547,7 +561,8 @@ def apply_changes_to_index(
             touched, n_live_probe = int(probe["t"]), int(probe["n"])
         if n_live_probe and touched / n_live_probe >= AUTO_DELTA_SHARD_FRACTION:
             return _apply_changes_delta(
-                spark, index_dir, new_corpus, changes, key_cols, order_col
+                spark, index_dir, new_corpus, changes, key_cols, order_col,
+                km_min,
             )
     # rebuild path: base-only invariants below (the docs table is the id
     # authority and every changed shard is rewritten wholesale), so any
@@ -628,7 +643,7 @@ def apply_changes_to_index(
     # carry millions of keys (the same rationale that removed the hint in
     # upsert_corpus_mirror, streaming/pipeline.py) — resume_apply can hand
     # this function exactly that delta. AQE broadcasts when it fits.
-    if kmeta is not None and _keymap_worth(int(max_id) + 1):
+    if kmeta is not None and int(max_id) + 1 >= km_min:
         shard_side = km_mod.lookup(spark, _km_paths, feed, key_cols, kmeta).select(
             *key_cols, "shard"
         )
@@ -955,7 +970,7 @@ def apply_changes_to_index(
     # doc_id but doc_len may change; inserts are new rows; deletes get
     # dead markers). No broadcast hint on the feed side: a bulk
     # re-ingest feed is unbounded (AQE broadcasts when it fits).
-    if kmeta is not None and _keymap_worth(int(max_id) + int(n_inserts) + 1):
+    if kmeta is not None and int(max_id) + int(n_inserts) + 1 >= km_min:
         try:
             km_alive = (
                 spark.read.parquet(docs_path)
@@ -1020,7 +1035,8 @@ def _apply_changes_delta(
     new_corpus: DataFrame,
     changes: DataFrame,
     key_cols: list[str],
-    order_col: str = "seq_no",
+    order_col: str,
+    km_min: int,
 ) -> dict:
     """O(changed-docs) incremental apply: write ONE delta segment + the
     superseded doc_ids as tombstones — no base shard is read or written.
@@ -1047,6 +1063,9 @@ def _apply_changes_delta(
     invisible — readers intersect postings segs with committed docs segs
     — and a crash before the stats write self-heals at fold time (fold
     recomputes every dirty shard's partials).
+
+    ``km_min``: the keymap size threshold (keymap_min_docs), read by
+    the caller before any write.
 
     Returns the rebuild-path dict plus {"segment", "strategy": "delta",
     "compact_recommended"}.
@@ -1130,15 +1149,13 @@ def _apply_changes_delta(
     # lookup side is a bucket/row-group-PRUNED read of the key cache
     # instead of the full docs metadata (O(delta) at any corpus size);
     # otherwise the live-view scan, after which the cache is rebuilt.
-    if kmeta is not None and _keymap_worth(int(max_id) + 1):
+    if kmeta is not None and int(max_id) + 1 >= km_min:
         meta_side = km_mod.lookup(spark, paths, feed, key_cols, kmeta)
     else:
         meta_side = read_docs(spark, paths).select(
             *key_cols, "doc_id", "shard", "doc_len"
         )
     trace("lookup_plan")
-    import os as _os
-
     from go_dcp_elasticsearch_spark.session import tiny_df
 
     joined = feed.join(meta_side, key_cols, "left")
@@ -1146,23 +1163,21 @@ def _apply_changes_delta(
     # and the old path ran FOUR bookkeeping jobs over `joined` (count,
     # alive probe, insert-rank counts, dead aggregate) — pure fixed
     # scheduling overhead on the path whose point is low fixed cost.
-    # When the joined feed fits a driver cap (default 100k rows,
-    # SPARK_GRAFT_SMALL_DELTA_MAX) it is collected ONCE and every count,
-    # per-shard dead stat, insert rank and keymap marker derives
-    # driver-side — zero further metadata jobs. Bigger feeds keep the
+    # When the joined feed fits a driver cap (SMALL_DELTA_MAX rows) it
+    # is collected ONCE and every count, per-shard dead stat, insert
+    # rank and keymap marker derives driver-side — zero further metadata jobs. Bigger feeds keep the
     # distributed shape with the three aggregates FUSED into one
     # groupBy("shard") job. Rank parity: the driver path sorts alive
     # keys by plain tuple order, which equals the range-partitioned sort
     # for string/integer keys (UTF-8 byte order == code-point order);
     # other key types always take the distributed path.
-    small_max = int(_os.environ.get("SPARK_GRAFT_SMALL_DELTA_MAX", "100000"))
     _key_types = {f.name: f.dataType.simpleString() for f in base.schema.fields}
     keys_sortable = all(
         _key_types.get(k) in ("string", "int", "bigint", "smallint", "tinyint")
         for k in key_cols
     )
-    rows = joined.limit(small_max + 1).collect() if keys_sortable else None
-    small = rows is not None and len(rows) <= small_max
+    rows = joined.limit(SMALL_DELTA_MAX + 1).collect() if keys_sortable else None
+    small = rows is not None and len(rows) <= SMALL_DELTA_MAX
 
     def _kv(r):
         return tuple(r[k] for k in key_cols)
@@ -1483,12 +1498,12 @@ def _apply_changes_delta(
     # keymap maintenance (cache only — failure leaves it invalid and the
     # next apply rebuilds): append this apply's key changes under the
     # POST-commit epoch, or rebuild the base if the cache was invalid.
-    # Below the keymap size threshold (see _keymap_worth) maintenance is
+    # Below the keymap size threshold (see keymap_min_docs) maintenance is
     # skipped wholesale: the stale epoch keeps the cache invalid (never
     # consulted) and the first apply past the threshold rebuilds it here.
     try:
         new_count = b.lineage.record_count()
-        if not _keymap_worth(int(max_id) + int(n_alive) + 1):
+        if int(max_id) + int(n_alive) + 1 < km_min:
             pass
         elif kmeta is not None and small:
             # r7: both marker sets derive from already-collected driver

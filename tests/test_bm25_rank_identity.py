@@ -96,50 +96,6 @@ def test_with_meta_roundtrip(spark, tmp_path):
     assert {r["doc_id"] for r in out} == {r["doc_id"] for r in hits.collect()}
 
 
-def test_epoch_check_ttl(spark, tmp_path):
-    """epoch_check_interval_sec rate-limits the per-query staleness probe:
-    within the window a mutation is NOT picked up (bounded staleness, the
-    ES refresh_interval analogue); after the window expires — or via
-    manual refresh() — the handle re-snapshots."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from go_dcp_elasticsearch_spark.corpus import synth_corpus
-    from go_dcp_elasticsearch_spark.index import BM25Query, IndexBuilder
-    from go_dcp_elasticsearch_spark.sources.changes import apply_changes_to_index
-
-    idx = str(tmp_path / "idx")
-    corpus = synth_corpus(spark, 60)
-    IndexBuilder(spark, idx, n_shards=2).build(corpus)
-    q = BM25Query(spark, idx, epoch_check_interval_sec=300.0)
-    q.topk_pruned("getvalue", 3).collect()  # consume the first probe slot
-    epoch0 = q._epoch
-
-    victim = corpus.limit(1).collect()[0]
-    new_corpus = corpus.withColumn(
-        "content",
-        F.when(
-            (F.col("repo") == victim["repo"]) & (F.col("path") == victim["path"]),
-            F.lit("zzttltoken fresh"),
-        ).otherwise(F.col("content")),
-    )
-    changes = spark.createDataFrame(
-        [(victim["repo"], victim["path"], "index", 99)],
-        "repo string, path string, action string, seq_no long",
-    )
-    apply_changes_to_index(spark, idx, new_corpus, changes)
-
-    # inside the TTL window: the handle must NOT refresh (epoch pinned)
-    q.topk_pruned("zzttltoken", 3).collect()
-    assert q._epoch == epoch0
-    # expire the window: next query refreshes and sees the mutation
-    q._last_epoch_check = _time.monotonic() - 301.0
-    hits = q.topk_pruned("zzttltoken", 3).collect()
-    assert q._epoch != epoch0
-    assert len(hits) == 1
-
-
 def test_conjunctive_mode(spark, tmp_path):
     """mode='all' (ES bool.must): every returned doc contains EVERY query
     term; scores use corpus-wide idf (identical to the matching 'any'
@@ -218,3 +174,31 @@ def test_conjunctive_mode(spark, tmp_path):
         q.with_meta(q.topk_pruned("zzconjfull", 1)).collect()[0]["doc_id"]
     )
     assert ins_id in got_ids
+
+
+def _hits(df):
+    return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
+
+
+def test_exact_scores_bitwise_equal_pruned(spark, built):
+    """The exact (Spark SQL) and pruned (shard kernel) paths add the same
+    idf * tf_norm products in the same term-lexicographic order, so their
+    scores are EQUAL, not merely close — a tie at the top-k cut resolves
+    the same way on both paths."""
+    index_dir, _ = built
+    q = BM25Query(spark, index_dir)
+    multi_term = [t for t in QUERY_SET if len(set(tokenize_py(t))) > 1]
+    for qtext in multi_term[:5]:
+        for mode in ("any", "all"):
+            exact = _hits(q.topk_exact(qtext, 50, mode=mode))
+            assert exact == _hits(q.topk_pruned(qtext, 50, mode=mode)), (
+                qtext, mode,
+            )
+    for clauses in (
+        dict(must="buffer", should="var3 var11", must_not="var30"),
+        dict(should="local var3 var7", minimum_should_match=2),
+        dict(filter="buffer", should="get value index"),
+    ):
+        exact = _hits(q.topk_bool(k=50, strategy="exact", **clauses))
+        assert exact, clauses
+        assert exact == _hits(q.topk_bool(k=50, **clauses)), clauses

@@ -36,7 +36,7 @@ KEYS = ["repo", "path"]
 def _force_keymap(monkeypatch):
     """These tests exercise the keymap machinery on tiny fixtures, which
     sit far below the r7 size threshold that routes small indexes to the
-    plain metadata scan (changes._keymap_worth) — pin it to 0 so every
+    plain metadata scan (changes.keymap_min_docs) — pin it to 0 so every
     maintenance/lookup path stays active."""
     monkeypatch.setenv("SPARK_GRAFT_KEYMAP_MIN_DOCS", "0")
 
@@ -381,7 +381,7 @@ def test_keymap_delta_history_folds_at_threshold(spark, tmp_path, monkeypatch):
 def test_keymap_size_threshold_routes_small_to_full_scan(
     spark, tmp_path, monkeypatch
 ):
-    """r7 size threshold (changes._keymap_worth): below it the build
+    """r7 size threshold (changes.keymap_min_docs): below it the build
     skips the base write, applies use the plain metadata scan, and
     maintenance is skipped (the stale epoch keeps the cache invalid) —
     with results identical to the keymap route. The first apply after
@@ -429,3 +429,32 @@ def test_keymap_size_threshold_routes_small_to_full_scan(
     apply_changes_to_index(spark, idx, state2, changes2, strategy="delta")
     assert _meta(spark, idx) is not None, "apply past threshold rebuilds"
     _assert_matches_live(spark, idx, _all_keys(spark, idx, set()))
+
+
+def test_malformed_keymap_min_docs_fails_before_any_write(
+    spark, tmp_path, monkeypatch
+):
+    """SPARK_GRAFT_KEYMAP_MIN_DOCS is read once when an apply starts: a
+    malformed value raises ValueError naming the variable and the value,
+    on every strategy, before the apply writes anything (the lineage
+    record count — the index epoch — does not move)."""
+    idx = str(tmp_path / "idx_bad_env")
+    corpus = synth_corpus(spark, 20)
+    IndexBuilder(spark, idx, n_shards=1).build(corpus)
+    lineage = LineageLog(spark, IndexPaths(idx).lineage)
+    before = lineage.record_count()
+    key = corpus.select("repo", "path").limit(1).collect()[0]
+    changes = spark.createDataFrame(
+        [(key["repo"], key["path"], "delete", 10)],
+        "repo string, path string, action string, seq_no long",
+    )
+    for bad in ("12k", "-1"):
+        monkeypatch.setenv("SPARK_GRAFT_KEYMAP_MIN_DOCS", bad)
+        for strategy in ("rebuild", "delta", "auto"):
+            with pytest.raises(
+                ValueError, match=f"SPARK_GRAFT_KEYMAP_MIN_DOCS.*'{bad}'"
+            ):
+                apply_changes_to_index(
+                    spark, idx, corpus, changes, strategy=strategy
+                )
+    assert lineage.record_count() == before

@@ -2,7 +2,7 @@
 (score, doc_id) cursor return exactly the next page — pages concatenate
 to the unpaged ranking, pruned == exact, cross-strategy cursors agree,
 and pruning stays sound under the cursor (the UB clamp + passing-lambda
-rules in _make_shard_kernel).
+rules in the shard kernel, query._make_spec_kernel).
 
 Reference contract: ES search_after is the supported deep-paging path of
 the _search API the reference's sink serves (from+size over-fetches

@@ -38,7 +38,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # this bench MEASURES the keymap path at every size — disable the r7
     # small-corpus threshold that would route sub-200k corpora to the
-    # full scan (changes._keymap_worth)
+    # full scan (changes.keymap_min_docs)
     os.environ.setdefault("SPARK_GRAFT_KEYMAP_MIN_DOCS", "0")
 
     from pyspark.sql import functions as F
