@@ -21,7 +21,9 @@ with bitwise-identical scores:
    contains the true top-k) and exact. Each shard returns a local top-k;
    the global answer is the merge of n_shards * k rows — the Elasticsearch
    shard-fan-in model the reference relies on implicitly. One kernel
-   (_make_spec_kernel) serves topk_pruned, topk_bool and topk_batch.
+   (_make_spec_kernel) serves topk_pruned, topk_bool and topk_batch;
+   inputs of at most DRIVER_MAX_POSTINGS candidate postings run it on the
+   driver after one scan job (see _spec_topk).
 
 Scale notes: query terms + dictionary rows + stats are O(query) and
 broadcast; the only large read is the postings scan, pruned by a
@@ -73,6 +75,10 @@ DECODED_SCHEMA = StructType(
 _BLOCK_COLS = ("shard", "term", "seg", "block_id", "ids_vb", "tfs_vb",
                "dls_vb", "max_tf", "min_dl")
 
+# result schemas: a query's hits, and a batch's hits keyed by query_id
+_HITS = "doc_id long, score double"
+_QUERY_HITS = "query_id long, doc_id long, score double"
+
 
 @dataclass(frozen=True)
 class ClauseSpec:
@@ -122,6 +128,14 @@ class BM25Query:
     # vocabularies while keeping the common case at ZERO dictionary jobs
     # per warm query (~2M terms ~= 150 MB of dict, well under driver heap)
     DRIVER_DICT_MAX_TERMS = 2_000_000
+    # a pruned query (or batch) whose candidate postings — the sum over its
+    # specs of their terms' df, read from the driver dict — number at most
+    # this many runs its shard kernel on the DRIVER after one scan-only job
+    # (see _spec_topk). At 2-5 us per posting the kernel then costs at most
+    # ~0.3 s, below the fixed cost of the shard shuffle + Python stage alone
+    # (~0.4 s), so the driver path cannot lose; bigger inputs keep the
+    # shard-parallel plan
+    DRIVER_MAX_POSTINGS = 100_000
 
     def __init__(
         self,
@@ -462,7 +476,7 @@ class BM25Query:
         AFTER_EPS for the tie tolerance."""
         spec, idfs = self._match_spec(query, mode, after)
         if spec is None:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         return self._exact_scored_bool(spec, idfs).orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
         ).limit(k)
@@ -497,12 +511,7 @@ class BM25Query:
             if not pdfs:
                 return
             pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            if len(pdf) == 0:
-                return
-            for _, g in pdf.groupby("shard", sort=False):
-                out = kernel(g)
-                if len(out):
-                    yield out
+            yield from _shard_hits(pdf, kernel)
 
         # epoch-cached salt expression (see refresh): rebuilding the
         # 2*n_shards-literal map per query was pure py4j latency
@@ -535,10 +544,15 @@ class BM25Query:
         both bounds still dominate every passing doc's true score.
         Cursor ties use the AFTER_EPS tolerance (pruned and exact paths
         return bitwise-equal scores; ES compares the sort values it
-        itself returned, same contract)."""
+        itself returned, same contract).
+
+        A query whose candidate postings fit DRIVER_MAX_POSTINGS is
+        computed when this call is made (one scan job) and returned as a
+        local frame; larger ones return a lazy shard-parallel plan (see
+        _spec_topk)."""
         spec, idfs = self._match_spec(query, mode, after)
         if spec is None:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         return self._spec_topk({0: spec}, idfs, k)
 
     def _spec_topk(
@@ -546,11 +560,18 @@ class BM25Query:
         chunk_size: int = 128, per_query: bool = False,
     ) -> DataFrame:
         """The pruned physical path for any batch of clause specs: one
-        postings scan over the union of their terms, one shard shuffle,
-        the spec kernel per shard, then the merge of the local top-k
-        rows. A single query merges with ``orderBy().limit()`` (global
-        TakeOrdered) into (doc_id, score); ``per_query`` keeps query_id
-        and takes each query's top-k with a window."""
+        postings scan over the union of their terms, the spec kernel per
+        shard, then the merge of the local top-k rows into (doc_id, score)
+        — or, with ``per_query``, each query's top-k with its query_id.
+
+        Small inputs (candidate postings <= DRIVER_MAX_POSTINGS, decided
+        from the driver dict at zero jobs) run NOW on the driver: the scan
+        is one job collected through Arrow, the same kernel runs per shard
+        group in this process, and the merged rows come back as a local
+        frame, so collecting the result runs no further job. Otherwise the
+        plan stays lazy: one shard shuffle, the kernel in a Python stage
+        per shard, then a global TakeOrdered (single query) or a window
+        (per_query)."""
         from pyspark.sql import Window
 
         terms = sorted(set().union(*(s.all_terms() for s in specs.values())))
@@ -558,9 +579,24 @@ class BM25Query:
             specs, idfs, self.avgdl, k, self._tomb, chunk_size
         )
         blocks = self._candidate_blocks(terms).select(*_BLOCK_COLS)
-        local = self._per_shard(
-            blocks, kernel, "query_id long, doc_id long, score double"
-        )
+        df = self._df_map
+        if df is not None and sum(
+            df.get(t, 0) for s in specs.values() for t in s.all_terms()
+        ) <= self.DRIVER_MAX_POSTINGS:
+            hits = list(_shard_hits(blocks.toPandas(), kernel))
+            schema = _QUERY_HITS if per_query else _HITS
+            if not hits:
+                return _local_frame(self.spark, schema)
+            top = (
+                pd.concat(hits, ignore_index=True)
+                .sort_values(["query_id", "score", "doc_id"],
+                             ascending=[True, False, True])
+                .groupby("query_id", sort=False).head(k)
+            )
+            if not per_query:
+                top = top[["doc_id", "score"]]
+            return _local_frame(self.spark, schema, top)
+        local = self._per_shard(blocks, kernel, _QUERY_HITS)
         order = (F.col("score").desc(), F.col("doc_id").asc())
         if not per_query:
             return local.select("doc_id", "score").orderBy(*order).limit(k)
@@ -623,7 +659,7 @@ class BM25Query:
         self._ensure_fresh()
         terms = self.expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         fn = self.topk_pruned if strategy == "pruned" else self.topk_exact
         return fn(" ".join(terms), k)
 
@@ -897,7 +933,7 @@ class BM25Query:
             op="match_frame", terms_filter=terms_filter,
         )
         if spec is None:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         return self._bool_frame(spec, idfs, rng_pred)
 
     def _bool_frame(
@@ -1008,7 +1044,9 @@ class BM25Query:
         postings are decoded id-streams only (their tf/dl payloads are
         never touched); the block-max UB over matched must+should blocks
         stays a sound score bound, so the two-phase pruning is
-        unchanged."""
+        unchanged. Like topk_pruned, a pruned query under
+        DRIVER_MAX_POSTINGS is computed when the call is made and
+        returned as a local frame."""
         if strategy not in ("pruned", "exact"):
             raise ValueError(
                 f"topk_bool: unknown strategy {strategy!r} "
@@ -1019,7 +1057,7 @@ class BM25Query:
             op="topk_bool", terms_filter=terms_filter,
         )
         if spec is None:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         if rng_pred is None and strategy == "pruned":
             return self._spec_topk({0: spec}, idfs, k)
         return self._bool_frame(spec, idfs, rng_pred).orderBy(
@@ -1331,7 +1369,7 @@ class BM25Query:
         self._ensure_fresh()
         terms = self.expand_fuzzy(term, max_edits, prefix_length, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         fn = self.topk_pruned if strategy == "pruned" else self.topk_exact
         return fn(" ".join(terms), k)
 
@@ -1383,7 +1421,7 @@ class BM25Query:
         self._ensure_fresh()
         terms = self.expand_wildcard(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], schema="doc_id long, score double")
+            return _local_frame(self.spark, _HITS)
         fn = self.topk_pruned if strategy == "pruned" else self.topk_exact
         return fn(" ".join(terms), k)
 
@@ -1459,13 +1497,11 @@ class BM25Query:
                     "invalidates the sidecar until the next build)"
                 )
         seq = tokenize_py(query)
-        empty = self.spark.createDataFrame([], schema="doc_id long, score double")
-        if not seq:
-            return empty
         uniq = sorted(set(seq))
-        idfs = self._term_stats(uniq)
-        if len(idfs) < len(uniq):
-            return empty  # a term absent from the corpus: no phrase match
+        idfs = self._term_stats(uniq) if uniq else {}
+        if not uniq or len(idfs) < len(uniq):
+            # no tokens, or a term absent from the corpus: no phrase match
+            return _local_frame(self.spark, _HITS)
         scored = self._exact_scored_bool(ClauseSpec(must=tuple(uniq)), idfs)
         if source is None:
             return self._phrase_verify_positions(scored, seq, slop, k)
@@ -1707,7 +1743,11 @@ class BM25Query:
         cleared between chunks), then a per-query window top-k. The batch
         analogue of the reference's concurrent bulk requests
         (bulk.go:410-425) without N scans.
-        """
+
+        A batch whose candidate postings (df summed over every query's
+        terms) fit DRIVER_MAX_POSTINGS is computed when this call is made
+        — one scan job, the same kernel on the driver — and returned as
+        a local frame (see _spec_topk)."""
         _check_mode(mode)
         self._ensure_fresh()
         qterms = {qid: self.analyze(qtext) for qid, qtext in queries}
@@ -1725,7 +1765,7 @@ class BM25Query:
                 # query (ES bool.must); the rest of the batch proceeds
                 specs[qid] = ClauseSpec(must=live)
         if not specs:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _local_frame(self.spark, TOPK_SCHEMA)
         return self._spec_topk(specs, idfs, k, chunk_size, per_query=True)
 
 
@@ -1835,6 +1875,29 @@ def _check_mode(mode: str) -> None:
     if mode not in ("any", "all"):
         raise ValueError(f"BM25Query: unknown match mode {mode!r} "
                          "(expected 'any' or 'all')")
+
+
+def _local_frame(
+    spark: SparkSession, schema, pdf: pd.DataFrame | None = None
+) -> DataFrame:
+    """A driver-side result (``pdf``; None = empty) as a LocalTableScan,
+    whose collect runs no Spark job. An empty pandas frame or row list
+    would come back as a Python-backed RDD scan costing one job (~0.4 s)
+    to collect; ``limit(0)`` lets the optimizer replace it with an empty
+    local relation."""
+    if pdf is None or not len(pdf):
+        return spark.createDataFrame([], schema).limit(0)
+    return spark.createDataFrame(pdf, schema)
+
+
+def _shard_hits(pdf: pd.DataFrame, kernel):
+    """Run a shard kernel once per shard group of ``pdf`` (postings
+    blocks), yielding its non-empty outputs — the loop both the Python
+    stage of _per_shard and the driver path of _spec_topk run."""
+    for _, g in pdf.groupby("shard", sort=False):
+        out = kernel(g)
+        if len(out):
+            yield out
 
 
 def _block_ub(max_tf: float, min_dl: float, avgdl: float) -> float:

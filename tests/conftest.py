@@ -26,3 +26,13 @@ def tmp_index_dir():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture()
+def distributed(monkeypatch):
+    """Pin pruned queries to the shard-parallel plan. Every test index is
+    small enough for the driver path (BM25Query.DRIVER_MAX_POSTINGS), so
+    without this fixture only that path would run."""
+    from go_dcp_elasticsearch_spark.index.query import BM25Query
+
+    monkeypatch.setattr(BM25Query, "DRIVER_MAX_POSTINGS", 0)

@@ -80,6 +80,33 @@ def test_batch_retrieval_matches_single(spark, built, chunk_size):
         assert [g[0] for g in got] == [w[0] for w in want], qtext
 
 
+# the two checks above on the shard-parallel plan: their index is under
+# BM25Query.DRIVER_MAX_POSTINGS, so by default pruned queries take the
+# driver path (topk_exact has one plan, so only topk_pruned is re-run)
+
+
+@pytest.mark.usefixtures("distributed")
+@pytest.mark.parametrize("k", [10, 3])
+def test_rank_identity_pruned_distributed(spark, built, k):
+    index_dir, docs_tokens = built
+    q = BM25Query(spark, index_dir)
+    for qtext in QUERY_SET:
+        want = bm25_oracle(docs_tokens, tokenize_py(qtext), k)
+        got = [
+            (int(r["doc_id"]), float(r["score"]))
+            for r in q.topk_pruned(qtext, k).collect()
+        ]
+        assert [g[0] for g in got] == [w[0] for w in want], qtext
+        for (gd, gs), (wd, ws) in zip(got, want):
+            assert abs(gs - ws) < 1e-9, (qtext, gd)
+
+
+@pytest.mark.usefixtures("distributed")
+@pytest.mark.parametrize("chunk_size", [64, 2])
+def test_batch_retrieval_matches_single_distributed(spark, built, chunk_size):
+    test_batch_retrieval_matches_single(spark, built, chunk_size)
+
+
 def test_with_meta_roundtrip(spark, tmp_path):
     """Hits -> forward-store join returns the caller-facing identity
     (repo, path) for every hit, broadcast side = hits."""

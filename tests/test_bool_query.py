@@ -70,6 +70,21 @@ def test_bool_rank_identity(spark, bool_idx, must, should, must_not, msm):
         assert got == exp, (strategy, must, should, must_not, msm)
 
 
+@pytest.mark.usefixtures("distributed")
+def test_bool_rank_identity_pruned_distributed(spark, bool_idx):
+    """pruned == oracle on the shard-parallel plan: the index is small
+    enough that pruned topk_bool otherwise runs on the driver (both plans
+    over a delta segment with tombstones: test_driver_path.py)."""
+    idx, toks = bool_idx
+    q = BM25Query(spark, idx)
+    for must, should, must_not, msm in CASES:
+        exp = [(d, round(s, 9)) for d, s in
+               _expected(toks, must, should, must_not, msm)]
+        got = _got(q, "pruned", must=must, should=should, must_not=must_not,
+                   minimum_should_match=msm)
+        assert got == exp, (must, should, must_not, msm)
+
+
 def test_bool_msm_defaults(spark, bool_idx):
     """ES defaults: should-only -> msm=1; must present -> msm=0 (shoulds
     become pure score boosters)."""

@@ -64,6 +64,13 @@ def test_pages_concatenate_to_unpaged_ranking(spark, pag_idx, fn_name):
     assert flat == full[: len(flat)] and len(flat) == 3 * K
 
 
+@pytest.mark.usefixtures("distributed")
+def test_pages_concatenate_to_unpaged_ranking_distributed(spark, pag_idx):
+    """The paging check on the shard-parallel plan (the index is small
+    enough that topk_pruned otherwise runs on the driver)."""
+    test_pages_concatenate_to_unpaged_ranking(spark, pag_idx, "topk_pruned")
+
+
 def test_pruned_equals_exact_per_page(spark, pag_idx):
     idx, _ = pag_idx
     q = BM25Query(spark, idx)

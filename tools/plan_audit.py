@@ -47,6 +47,9 @@ def main() -> None:
         spark, idx, n_shards=4, field_cols=["lang"], docvalue_cols=["nc"],
         positions=True,
     ).build(_nc(synth_corpus(spark, 2000)))
+    # audit the shard-parallel plans: queries this small otherwise run on
+    # the driver and return a LocalTableScan (see BM25Query._spec_topk)
+    BM25Query.DRIVER_MAX_POSTINGS = 0
     q = BM25Query(spark, idx)
 
     sections: list[tuple[str, str, str]] = []
