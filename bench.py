@@ -35,7 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # the previous round's final commit — update each round after the driver
 # records BENCH_r{N}.json so round N+1's comparison is mechanical
-DEFAULT_CONTROL_COMMIT = "027c719"
+DEFAULT_CONTROL_COMMIT = "68661c1"
 
 QUERY_SET = [
     "spark filter join",

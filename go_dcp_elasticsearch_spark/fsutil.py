@@ -133,3 +133,24 @@ def list_root_files(spark, path: str) -> list[str]:
     return [
         st.getPath().getName() for st in fs.listStatus(p) if st.isFile()
     ]
+
+
+def list_data_files(spark, path: str) -> list[tuple[str, int, int]]:
+    """(path, length, mtime) of every data file under ``path``, recursive,
+    skipping what Spark's readers skip (any path component starting with
+    ``_`` or ``.``: commit markers, checksums, ``_temporary``). One FS
+    listing, no Spark job; [] when ``path`` does not exist."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return []
+    root = fs.makeQualified(p).toString().rstrip("/") + "/"
+    out = []
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        st = it.next()
+        full = st.getPath().toString()
+        rel = full[len(root):] if full.startswith(root) else st.getPath().getName()
+        if any(part.startswith(("_", ".")) for part in rel.split("/")):
+            continue
+        out.append((full, int(st.getLen()), int(st.getModificationTime())))
+    return sorted(out)

@@ -20,7 +20,6 @@ identifiers per BASELINE.json.north_star.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column
@@ -74,10 +73,3 @@ def tokenize_duckdb_sql(col_expr: str) -> str:
         "'[^a-z0-9]+'), t -> t <> '')"
     )
 
-
-def tokenize_partition(rows: Iterator[pd.DataFrame], text_col: str = "content") -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: adds a ``tokens`` column per Arrow batch."""
-    for pdf in rows:
-        pdf = pdf.copy()
-        pdf["tokens"] = pdf[text_col].map(tokenize_py)
-        yield pdf

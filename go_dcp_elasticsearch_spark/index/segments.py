@@ -48,11 +48,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyspark.sql.types import IntegerType, StructField, StructType
+
 from go_dcp_elasticsearch_spark.index.builder import POSTINGS_SCHEMA, IndexPaths
 
 # seg value used for base posting blocks when unioned with segment blocks
 # (segment ids are >= 0; kernels key decode caches by (term, seg, block_id))
 BASE_SEG = -1
+
+# segment postings as read back: the block columns plus the ``seg=K``
+# partition column. Reads pass it so Spark runs no footer-inference job.
+DELTA_POSTINGS_SCHEMA = StructType(
+    POSTINGS_SCHEMA.fields + [StructField("seg", IntegerType(), False)]
+)
 
 # test-only fault injection for the fold commit protocol: set to one of
 # "after_stage" / "after_marker" / "mid_commit" / "before_cleanup" /
@@ -310,30 +318,10 @@ def read_delta_postings(
     if not exists(spark, paths.delta_postings):
         return None
     return (
-        spark.read.parquet(paths.delta_postings)
+        spark.read.schema(DELTA_POSTINGS_SCHEMA).parquet(paths.delta_postings)
         .filter(F.col("seg").isin([int(s) for s in segs]))
-        .select(*[f.name for f in POSTINGS_SCHEMA.fields], F.col("seg").cast("int"))
+        .select(*DELTA_POSTINGS_SCHEMA.fieldNames())
     )
-
-
-def candidate_blocks(
-    spark, paths: IndexPaths, terms: list[str], segs: list[int] | None = None
-) -> DataFrame:
-    """Posting blocks for ``terms`` across base + committed segments, with
-    a ``seg`` column (base = BASE_SEG). The term predicate is pushed into
-    both parquet scans; segment scans are tiny by construction. Pass the
-    ``segs`` snapshotted at refresh time so a held query handle stays
-    consistent with its tombstone snapshot."""
-    recover_pending_fold(spark, paths)
-    base = (
-        spark.read.parquet(paths.postings)
-        .filter(F.col("term").isin(terms))
-        .withColumn("seg", F.lit(BASE_SEG))
-    )
-    delta = read_delta_postings(spark, paths, segs)
-    if delta is None:
-        return base
-    return base.unionByName(delta.filter(F.col("term").isin(terms)))
 
 
 def delta_df_frame(

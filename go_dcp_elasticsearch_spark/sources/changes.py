@@ -1326,15 +1326,31 @@ def _apply_changes_delta(
             c for c in base_cols
             if c not in ("doc_id", "content_sha256", "doc_len", "shard")
         ]
+        # merge fan-in (== the segment's postings FILE count) scales with
+        # the delta (r7): a 100-doc segment written as 32 files charged
+        # every later query and refresh 32 file opens per segment — per
+        # guide §6, segment sizing should track the data, and Lucene
+        # flushes small segments as single files for the same reason
+        n_merge = max(1, min(
+            int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 32,
+            -(-n_alive // 2048),
+        ))
         # r7: delta_corpus is AT MOST n_alive rows — persist the joined
         # slice itself so the postings pass, the docs-metadata pass and
         # the stats pass all read ONE materialized frame; the old shape
         # persisted only the chunk rows, and the docs pass re-scanned the
-        # caller's whole corpus lineage a second time per apply
+        # caller's whole corpus lineage a second time per apply. A small
+        # delta's slice is repartitioned to n_merge first: the broadcast
+        # join keeps the caller corpus's partitioning, so the tokenize
+        # stage below would otherwise run one (mostly empty) Python task
+        # per corpus partition; a big delta keeps its join's partitioning
         delta_corpus = joined_corpus.select(
             F.col("doc_id"), *[F.col(c) for c in meta_cols], F.col("content"),
             shard_col.alias("shard"),
-        ).persist()
+        )
+        if small:
+            delta_corpus = delta_corpus.repartition(n_merge)
+        delta_corpus = delta_corpus.persist()
         # one tokenize pass emits the posting chunks AND the per-doc
         # sentinels (sha256 + doc_len) — the fused-build shape
         all_rows = (
@@ -1346,15 +1362,6 @@ def _apply_changes_delta(
             .persist()
         )
         chunks = all_rows.filter(F.col("term") != DOC_SENTINEL)
-        # merge fan-in (== the segment's postings FILE count) scales with
-        # the delta (r7): a 100-doc segment written as 32 files charged
-        # every later query and refresh 32 file opens per segment — per
-        # guide §6, segment sizing should track the data, and Lucene
-        # flushes small segments as single files for the same reason
-        n_merge = max(1, min(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 32,
-            -(-n_alive // 2048),
-        ))
         postings = chunks.repartition(
             n_merge, F.col("term"), F.col("shard")
         ).mapInPandas(b._merge_chunks(None), schema=POSTINGS_SCHEMA)

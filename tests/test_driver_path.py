@@ -1,9 +1,11 @@
-"""Routing of pruned top-k between its two physical plans
+"""Routing of pruned top-k between its three physical routes
 (BM25Query._spec_topk): a query or batch whose candidate postings fit
-``BM25Query.DRIVER_MAX_POSTINGS`` runs one scan job and the shard kernel
-on the driver, and returns a local frame; a larger one keeps the shard
-shuffle and the Python stage. Both return equal rows. Empty results are
-local frames too, so collecting them runs no Spark job.
+``BM25Query.DRIVER_MAX_POSTINGS`` runs the shard kernel on the driver and
+returns a local frame — over the postings blocks held on the driver when
+the index's postings files total at most ``BM25Query.RESIDENT_MAX_BYTES``
+(no Spark job), else after one scan job; a larger one keeps the shard
+shuffle and the Python stage. All three return equal rows. Empty results
+are local frames too, so collecting them runs no Spark job.
 
 Jobs and stages are counted per job group through ``statusTracker()``,
 which works with ``spark.ui.enabled=false``.
@@ -17,7 +19,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_dcp_elasticsearch_spark.corpus import synth_corpus
+from go_dcp_elasticsearch_spark.fsutil import list_data_files
 from go_dcp_elasticsearch_spark.index import BM25Query, IndexBuilder
+from go_dcp_elasticsearch_spark.index.segments import fold_segments
 from go_dcp_elasticsearch_spark.sources.changes import apply_changes_to_index
 
 QUERIES = [
@@ -81,6 +85,15 @@ def _sum_df(q, text):
     return sum(q._df_map[t] for t in q.analyze(text) if t in q._df_map)
 
 
+def _postings_files(spark, idx, segs):
+    """(path, length, mtime) of the base postings files and those of the
+    delta segments ``segs``."""
+    return list_data_files(spark, f"{idx}/postings") + [
+        f for s in segs
+        for f in list_data_files(spark, f"{idx}/delta/postings/seg={s}")
+    ]
+
+
 def test_absent_term_collect_runs_no_job(spark, seg_idx):
     idx, _ = seg_idx
     q = BM25Query(spark, idx)
@@ -98,9 +111,10 @@ def test_absent_term_collect_runs_no_job(spark, seg_idx):
 
 
 def test_routes_return_equal_rows(spark, seg_idx, monkeypatch):
-    """Driver and distributed plans return == rows (doc_id, score and, for
-    batches, query_id) over an index with a delta segment and tombstones,
-    so the driver reads the tombstone broadcast's value correctly."""
+    """Resident, scan-job and distributed routes return == rows (doc_id,
+    score and, for batches, query_id) over an index with a delta segment
+    and tombstones, so the driver reads the tombstone broadcast's value
+    correctly."""
     idx, dead = seg_idx
     q = BM25Query(spark, idx)
     calls = [
@@ -123,6 +137,10 @@ def test_routes_return_equal_rows(spark, seg_idx, monkeypatch):
         return single, batch
 
     driver = run_all()
+    assert q._resident is not None
+    monkeypatch.setattr(BM25Query, "RESIDENT_MAX_BYTES", 0)
+    q.refresh()
+    assert q._resident is None and run_all() == driver
     monkeypatch.setattr(BM25Query, "DRIVER_MAX_POSTINGS", 0)
     assert run_all() == driver
     single, batch = driver
@@ -137,6 +155,7 @@ def test_jobs_per_route(spark, seg_idx, monkeypatch):
     with one stage (the postings scan); on the distributed plan it is the
     scan + shuffle job and the kernel + merge job."""
     idx, _ = seg_idx
+    monkeypatch.setattr(BM25Query, "RESIDENT_MAX_BYTES", 0)
     q = BM25Query(spark, idx)
     text = "buffer index"
     want = _rows(q.topk_pruned(text, 5))
@@ -151,6 +170,7 @@ def test_cap_boundary(spark, seg_idx, monkeypatch):
     """The cap is inclusive: at exactly the query's df sum the driver path
     runs (one job), one below it the distributed path (two)."""
     idx, _ = seg_idx
+    monkeypatch.setattr(BM25Query, "RESIDENT_MAX_BYTES", 0)
     q = BM25Query(spark, idx)
     text = "buffer value get"
     p = _sum_df(q, text)
@@ -159,3 +179,98 @@ def test_cap_boundary(spark, seg_idx, monkeypatch):
         monkeypatch.setattr(BM25Query, "DRIVER_MAX_POSTINGS", cap)
         _, jobs, _ = _counted(spark, lambda: q.topk_pruned(text, 5).collect())
         assert jobs == want_jobs, cap
+
+
+def test_resident_query_runs_no_job(spark, seg_idx):
+    """On a resident index a small pruned call + collect runs no Spark
+    job: the blocks come from the driver map, the result is a local
+    frame."""
+    idx, _ = seg_idx
+    q = BM25Query(spark, idx)
+    for call in (
+        lambda: _rows(q.topk_pruned("buffer index", 5)),
+        lambda: _rows(q.topk_bool(must="buffer", should="var3 var11")),
+        lambda: _rows(q.topk_batch(list(enumerate(QUERIES)), k=4)),
+    ):
+        rows, jobs, _ = _counted(spark, call)
+        assert rows and jobs == 0
+
+
+def test_resident_cap_boundary(spark, seg_idx, monkeypatch):
+    """The byte cap is inclusive: at exactly the listed postings bytes
+    (base + pinned segment files) the index is resident and a query runs
+    no job; one byte less and the query runs one scan job."""
+    idx, _ = seg_idx
+    q = BM25Query(spark, idx)
+    size = sum(f[1] for f in _postings_files(spark, idx, q._segs))
+    assert q._segs and size > 0
+    for cap, want_jobs in ((size, 0), (size - 1, 1)):
+        monkeypatch.setattr(BM25Query, "RESIDENT_MAX_BYTES", cap)
+        q.refresh()
+        assert (q._resident is not None) == (want_jobs == 0)
+        _, jobs, _ = _counted(spark, lambda: q.topk_pruned("buffer", 5).collect())
+        assert jobs == want_jobs, cap
+
+
+def test_resident_df_map_equals_dictionary(spark, seg_idx, monkeypatch):
+    """The df map summed from the resident blocks' counts equals the
+    dictionary aggregation (base partials + delta segments)."""
+    idx, _ = seg_idx
+    resident = BM25Query(spark, idx)
+    assert resident._resident is not None
+    monkeypatch.setattr(BM25Query, "RESIDENT_MAX_BYTES", 0)
+    aggregated = BM25Query(spark, idx)
+    assert aggregated._resident is None
+    assert resident._df_map == aggregated._df_map
+    assert len(resident._df_map) > 100
+
+
+def test_resident_reload_follows_listing(spark, tmp_path, monkeypatch):
+    """The resident blocks are keyed on the postings file listing: a
+    refresh whose listing is unchanged reads nothing, a delta apply or a
+    fold re-reads every listed file in one read, and the files a fold
+    replaced are evicted, so the handle never serves a base generation
+    the fold has replaced."""
+    idx = str(tmp_path / "idx")
+    corpus = synth_corpus(spark, 120)
+    IndexBuilder(spark, idx, n_shards=4).build(corpus)
+    loads = []
+    read = BM25Query._read_postings_files
+
+    def spy(self, base, delta):
+        loads.append(({f[0] for f in base}, {f[0] for f in delta}))
+        return read(self, base, delta)
+
+    monkeypatch.setattr(BM25Query, "_read_postings_files", spy)
+    q = BM25Query(spark, idx)
+    base0 = {f[0] for f in _postings_files(spark, idx, [])}
+    assert loads == [(base0, set())]
+
+    victim = spark.read.parquet(f"{idx}/docs").orderBy("doc_id").first()
+    is_victim = (F.col("repo") == victim["repo"]) & (F.col("path") == victim["path"])
+    new_corpus = corpus.withColumn(
+        "content",
+        F.when(is_victim, F.lit("buffer zzfoldmark")).otherwise(F.col("content")),
+    )
+    changes = spark.createDataFrame(
+        [(victim["repo"], victim["path"], "index", 10)],
+        "repo string, path string, action string, seq_no long",
+    )
+    apply_changes_to_index(spark, idx, new_corpus, changes, strategy="delta")
+    assert q.topk_pruned("zzfoldmark", 3).collect()  # refreshes the handle
+    seg_files = {f[0] for f in _postings_files(spark, idx, q._segs)} - base0
+    assert q._segs and seg_files and loads[1:] == [(base0, seg_files)]
+    q.refresh()  # same listing: the resident blocks are kept
+    assert len(loads) == 2 and q._resident is not None
+
+    fold_segments(spark, idx)
+    texts = ["buffer", "zzfoldmark", "getValue index", "value local"]
+    served = [_rows(q.topk_pruned(t, 10)) for t in texts]  # refreshes
+    base1 = {f[0] for f in _postings_files(spark, idx, [])}
+    assert not q._segs and base1 != base0
+    assert loads[2:] == [(base1, set())]
+    assert {f[0] for f in q._resident[0]} == base1  # replaced ones evicted
+    monkeypatch.setattr(BM25Query, "RESIDENT_MAX_BYTES", 0)
+    fresh = BM25Query(spark, idx)
+    assert served == [_rows(fresh.topk_pruned(t, 10)) for t in texts]
+    assert int(victim["doc_id"]) not in {r[0] for rows in served for r in rows}
