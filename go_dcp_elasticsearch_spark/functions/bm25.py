@@ -36,15 +36,6 @@ def tf_norm(tf: float, dl: float, avgdl: float, k1: float = K1, b: float = B) ->
     return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
-def idf_expr(n_docs: Column, df: Column) -> Column:
-    return F.log(F.lit(1.0) + (n_docs - df + F.lit(0.5)) / (df + F.lit(0.5)))
-
-
-def score_expr(tf: Column, dl: Column, avgdl: Column, idf_col: Column) -> Column:
-    k1, b = F.lit(K1), F.lit(B)
-    return idf_col * tf / (tf + k1 * (F.lit(1.0) - b + b * dl / avgdl))
-
-
 def phrase_match_py(tokens: list[str], phrase: list[str]) -> bool:
     """Pure-Python phrase test: ``phrase`` occurs as a consecutive
     subsequence of ``tokens``. Tokens are [a-z0-9]+ by construction, so

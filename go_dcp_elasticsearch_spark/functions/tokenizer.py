@@ -26,8 +26,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-_CAMEL = re.compile(r"([a-z0-9])([A-Z])")
-_SPLIT = re.compile(r"[^a-z0-9]+")
 # r7 perf: the camel boundary as a zero-width lookaround with a LITERAL
 # replacement — re.sub then skips the per-match group-template expansion
 # that dominated tokenize profiles (1.5x); token extraction as findall of

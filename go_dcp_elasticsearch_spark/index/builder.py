@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -45,20 +44,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from go_dcp_elasticsearch_spark.functions.bm25 import B, K1
 from go_dcp_elasticsearch_spark.functions.tokenizer import tokenize_py
 from go_dcp_elasticsearch_spark.plans.lineage import LineageLog
 from go_dcp_elasticsearch_spark.plans.metrics import MetricsLog
-
-TF_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("doc_id", LongType(), False),
-        StructField("tf", LongType(), False),
-        StructField("dl", LongType(), False),
-        StructField("shard", IntegerType(), False),
-    ]
-)
 
 # pre-encoded posting chunks emitted by the SPIMI map side: one row per
 # (term, shard) per source partition, already varbyte blocks.
@@ -80,6 +68,10 @@ TF_SCHEMA = StructType(
 # whole index (O(delta) refresh).
 # v5: stats_shards is a single-file table (n_shards rows; the partitioned
 # layout paid the per-directory commit protocol for nothing).
+# Any other version (or no _meta/index.json at all) is refused by
+# read_index_meta at BM25Query open and at every maintenance entry
+# (apply, compact, fold): there is no reader or upgrader for another
+# layout — such an index must be rebuilt with IndexBuilder.build.
 INDEX_FORMAT_VERSION = 5
 
 CHUNK_SCHEMA = StructType(
@@ -130,6 +122,20 @@ POSTINGS_SCHEMA = StructType(
 )
 
 
+# dictionary partials (term, df, cf) per shard partition: written by the
+# build's dictionary stage and re-derived per shard by every maintenance
+# path (changes._rewrite_dictionary_partials); df/cf are sums of the
+# postings' block count/tf_sum
+DICTIONARY_SCHEMA = StructType(
+    [
+        StructField("term", StringType(), False),
+        StructField("df", LongType(), True),
+        StructField("cf", LongType(), True),
+        StructField("shard", IntegerType(), True),
+    ]
+)
+
+
 @dataclass
 class IndexPaths:
     root: str
@@ -145,10 +151,6 @@ class IndexPaths:
     @property
     def dictionary(self) -> str:
         return f"{self.root}/dictionary"
-
-    @property
-    def stats(self) -> str:
-        return f"{self.root}/stats"
 
     @property
     def stats_shards(self) -> str:
@@ -488,7 +490,7 @@ def _chunk_partition(batches, *, fixed_shard: bool, n_docs: int | None,
     yield out
 
 
-def posting_chunks_fixed_shard(avgdl: float | None = None, with_doc_sentinels: bool = False,
+def posting_chunks_fixed_shard(with_doc_sentinels: bool = False,
                                field_cols: list[str] | None = None):
     """Chunk kernel that trusts a precomputed ``shard`` COLUMN instead of
     deriving shards from the doc-id range formula — used by (a) incremental
@@ -497,8 +499,9 @@ def posting_chunks_fixed_shard(avgdl: float | None = None, with_doc_sentinels: b
     The lexsort in the shared impl — rather than a stable sort by term
     alone — is what keeps (term, shard) groups contiguous with ascending
     ids when the shard column is NOT monotone in doc_id, e.g. hash routing.
-    (``avgdl`` accepted for backward compat and unused — block metadata is
-    (max_tf, min_dl), bound applied at query time.)"""
+    ``field_cols``: keyword-field postings are re-emitted for the rebuilt
+    docs (incremental applies read them from _meta, so the field
+    namespace stays consistent with the original build)."""
 
     def kernel(iterator):
         yield from _chunk_partition(
@@ -591,15 +594,30 @@ def _validate_docvalue_cols(df: DataFrame, cols: list[str], op: str) -> None:
 def read_index_meta(spark, index_dir: str) -> dict:
     """The index's durable build configuration (``_meta/index.json``,
     Hadoop FS): format_version, routing_col + routing modulus, id_mode.
-    Empty dict for pre-v4 indexes (callers default to non-routed)."""
+
+    Also the index's ONE format gate: raises ValueError when the file is
+    missing or its format_version is not INDEX_FORMAT_VERSION. Called
+    before any read or write at BM25Query open and at every maintenance
+    entry; one small FS read, no Spark job."""
     import json
 
     from go_dcp_elasticsearch_spark.fsutil import exists, read_file
 
-    path = f"{index_dir.rstrip('/')}/_meta/index.json"
-    if not exists(spark, path):
-        return {}
-    return json.loads(read_file(spark, path))
+    index_dir = index_dir.rstrip("/")
+    path = f"{index_dir}/_meta/index.json"
+    meta = json.loads(read_file(spark, path)) if exists(spark, path) else {}
+    found = meta.get("format_version")
+    if found != INDEX_FORMAT_VERSION:
+        raise ValueError(
+            f"index {index_dir}: on-disk format version "
+            f"{'none' if found is None else found}, expected "
+            f"{INDEX_FORMAT_VERSION}; rebuild it with IndexBuilder.build"
+        )
+    return meta
+
+
+#: stats partials table (``stats_shards``): one row per shard
+STATS_SCHEMA = "shard int, n_docs long, sum_dl long"
 
 
 def write_stats_tables(
@@ -623,7 +641,7 @@ def write_stats_tables(
     from go_dcp_elasticsearch_spark.session import tiny_df
 
     rows = [(int(s), int(n), int(sd)) for s, (n, sd) in sorted(partials.items())]
-    tiny_df(spark, rows, "shard int, n_docs long, sum_dl long").write.mode(
+    tiny_df(spark, rows, STATS_SCHEMA).write.mode(
         "overwrite"
     ).parquet(paths.stats_shards)
     return stats_from_partials(partials)
@@ -640,32 +658,25 @@ def stats_from_partials(parts: dict[int, tuple[int, int]]) -> tuple[int, float]:
 
 def read_stats_partials(spark, paths: IndexPaths) -> dict[int, tuple[int, int]]:
     """Current stats partials as {shard: (n_docs, sum_dl)} — n_shards tiny
-    rows, driver-side. Reads both the one-file layout and the short-lived
-    shard-partitioned one (the shard value then comes from the partition
-    column, transparently)."""
+    rows, driver-side, one schema-given read job."""
     return {
         int(r["shard"]): (int(r["n_docs"]), int(r["sum_dl"]))
-        for r in spark.read.parquet(paths.stats_shards).collect()
+        for r in spark.read.schema(STATS_SCHEMA).parquet(paths.stats_shards).collect()
     }
 
 
 def read_global_stats(spark, paths: IndexPaths) -> tuple[int, float]:
     """(n_docs, avgdl) derived from the stats partials (n_shards tiny
-    rows). Falls back to the legacy pre-v5 single-row ``stats`` table for
-    indexes that predate the partials layout."""
-    from go_dcp_elasticsearch_spark.fsutil import exists
-
-    if exists(spark, paths.stats_shards):
-        return stats_from_partials(read_stats_partials(spark, paths))
-    srow = spark.read.parquet(paths.stats).collect()[0]
-    return int(srow["n_docs"]), float(srow["avgdl"])
+    rows)."""
+    return stats_from_partials(read_stats_partials(spark, paths))
 
 
 def global_dictionary(spark, index_dir: str) -> DataFrame:
     """(term, df, cf) global view over the shard-partitioned dictionary
-    partials (sum across shards). Also reads legacy pre-v4 single-table
-    layouts, where the aggregation is a per-term no-op."""
-    d = spark.read.parquet(f"{index_dir.rstrip('/')}/dictionary")
+    partials (sum across shards)."""
+    d = spark.read.schema(DICTIONARY_SCHEMA).parquet(
+        f"{index_dir.rstrip('/')}/dictionary"
+    )
     return d.groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
 
 
@@ -787,50 +798,6 @@ class IndexBuilder:
 
     # ---- stage kernels ----
 
-    def _tf_rows(self, corpus_ids: DataFrame, n_docs: int) -> DataFrame:
-        """Tokenize + per-doc TF in one Arrow pass (SPIMI map side).
-
-        Emitting (term, doc_id, tf, dl) instead of exploded positions is the
-        map-side combine: shuffle volume is distinct-terms-per-doc, not
-        token count. ``shard`` uses the SAME range formula as the rest of
-        the engine (shard_of) so the output composes with the docs table
-        and query path.
-        """
-        n_shards = self.n_shards
-
-        def kernel(iterator):
-            from collections import Counter
-            from itertools import chain
-
-            import numpy as np
-
-            for pdf in iterator:
-                counters = [Counter(tokenize_py(c)) for c in pdf["content"]]
-                sizes = np.fromiter((len(c) for c in counters), dtype=np.int64, count=len(counters))
-                n = int(sizes.sum())
-                terms = list(chain.from_iterable(c.keys() for c in counters))
-                tfs = np.fromiter(
-                    chain.from_iterable(c.values() for c in counters), dtype=np.int64, count=n
-                )
-                doc_lens = np.fromiter(
-                    (sum(c.values()) for c in counters), dtype=np.int64, count=len(counters)
-                )
-                dids = np.repeat(pdf["doc_id"].to_numpy(), sizes)
-                dls = np.repeat(doc_lens, sizes)
-                yield pd.DataFrame(
-                    {
-                        "term": terms,
-                        "doc_id": dids,
-                        "tf": tfs,
-                        "dl": dls,
-                        "shard": np.minimum(
-                            dids * n_shards // max(n_docs, 1), n_shards - 1
-                        ).astype(np.int32),
-                    }
-                )
-
-        return corpus_ids.select("doc_id", "content").mapInPandas(kernel, schema=TF_SCHEMA)
-
     def _posting_chunks(self, n_docs: int, with_doc_sentinels: bool = False,
                         field_cols: list[str] | None = None):
         """SPIMI map side proper: per source partition, build LOCAL posting
@@ -862,14 +829,12 @@ class IndexBuilder:
 
         return kernel
 
-    def _merge_chunks(self, avgdl: float | None = None):
+    def _merge_chunks(self):
         """SPIMI reduce side: order each (term, shard) group's chunks by
         first_doc_id and assign sequential block_ids. Chunks are disjoint
         ranges, so no decoding — except small fragmented lists (total
         postings < BLOCK_SIZE across >1 chunk), which are re-encoded into
-        one dense block to keep block fill healthy for rare terms.
-        (``avgdl`` is accepted for backward compat and unused: block-max
-        metadata is (max_tf, min_dl), bound applied at query time.)"""
+        one dense block to keep block fill healthy for rare terms."""
         cols = [f.name for f in POSTINGS_SCHEMA.fields]
 
         def kernel(iterator):
@@ -954,88 +919,6 @@ class IndexBuilder:
             yield pd.DataFrame(rows, columns=cols)
 
         return kernel
-
-    def _encode_partition(self, avgdl: float | None = None):
-        """mapInPandas kernel: encode ALL (term, shard) groups of a hash
-        partition in one pass.
-
-        groupBy().applyInPandas costs ~1 ms of pandas object churn per
-        group; a code corpus has millions of singleton terms (unique
-        identifiers), so per-group overhead dominates. Instead the tf rows
-        are hash-repartitioned on (term, shard), each partition is sorted
-        once (np.lexsort), group boundaries found vectorized, and each
-        group encoded with O(1) numpy calls (encode_blocks_bulk).
-        """
-        cols = [f.name for f in POSTINGS_SCHEMA.fields]
-
-        def encode(iterator):
-            import numpy as np
-
-            from go_dcp_elasticsearch_spark.functions.codec import (
-                BLOCK_SIZE,
-                encode_blocks_bulk,
-            )
-
-            pdfs = list(iterator)
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            if len(pdf) == 0:
-                return
-            terms = pdf["term"].to_numpy()
-            shards = pdf["shard"].to_numpy()
-            ids_a = pdf["doc_id"].to_numpy()
-            order = np.lexsort((ids_a, shards, terms))
-            terms, shards, ids_a = terms[order], shards[order], ids_a[order]
-            tfs_a = pdf["tf"].to_numpy()[order]
-            dls_a = pdf["dl"].to_numpy()[order]
-            change = np.empty(len(terms), dtype=bool)
-            change[0] = True
-            change[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-            starts = np.nonzero(change)[0]
-            ends = np.append(starts[1:], len(terms))
-            rows = []
-            for s, e in zip(starts, ends):
-                blocks = encode_blocks_bulk(ids_a[s:e], tfs_a[s:e], dls_a[s:e])
-                mindl = np.minimum.reduceat(dls_a[s:e], np.arange(0, e - s, BLOCK_SIZE))
-                t, sh = terms[s], int(shards[s])
-                for bi, (ids_vb, tfs_vb, dls_vb, cnt, max_id, max_tf, tf_sum) in enumerate(blocks):
-                    rows.append(
-                        (t, sh, bi, ids_vb, tfs_vb, dls_vb, cnt, max_id, max_tf, tf_sum,
-                         int(mindl[bi]))
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-        return encode
-
-    def _encode_groups(self, avgdl: float | None = None):
-        """applyInPandas kernel: one (term, shard) group -> compressed block rows."""
-
-        def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            from go_dcp_elasticsearch_spark.functions.codec import (
-                BLOCK_SIZE,
-                encode_blocks_bulk,
-            )
-
-            pdf = pdf.sort_values("doc_id")
-            ids = pdf["doc_id"].to_numpy()
-            tfs = pdf["tf"].to_numpy()
-            dls = pdf["dl"].to_numpy()
-            term = pdf["term"].iloc[0]
-            shard = int(pdf["shard"].iloc[0])
-            blocks = encode_blocks_bulk(ids, tfs, dls)
-            starts = np.arange(0, len(ids), BLOCK_SIZE)
-            mindl = np.minimum.reduceat(dls, starts)
-            rows = [
-                (term, shard, bi, ids_vb, tfs_vb, dls_vb, cnt, max_id, max_tf, tf_sum,
-                 int(mindl[bi]))
-                for bi, (ids_vb, tfs_vb, dls_vb, cnt, max_id, max_tf, tf_sum) in enumerate(blocks)
-            ]
-            return pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
-
-        return encode
 
     def salted_dictionary(self, tf_rows: DataFrame) -> DataFrame:
         """Dictionary (term, df, cf) via explicit salted two-phase aggregation.
@@ -1315,8 +1198,8 @@ class IndexBuilder:
                 .groupBy("term", "shard")
                 .agg(F.sum("count").alias("df"), F.sum("tf_sum").alias("cf"))
             )
-            # full replace: also clears a legacy unpartitioned dictionary
-            # whose root-level files a partitioned overwrite would keep
+            # full replace regardless of the session's partition
+            # overwrite mode (see the docs stage)
             delete_dir(self.spark, self.paths.dictionary)
             dictionary.repartition(self.n_shards, F.col("shard")).write.mode(
                 "overwrite"

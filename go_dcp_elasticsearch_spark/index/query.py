@@ -163,8 +163,10 @@ class BM25Query:
         index_dir: str,
         driver_dict_max_terms: int | None = None,
     ):
+        from go_dcp_elasticsearch_spark.index.builder import read_index_meta
         from go_dcp_elasticsearch_spark.plans.lineage import LineageLog
 
+        read_index_meta(spark, index_dir)  # format gate
         self.spark = spark
         self.paths = IndexPaths(index_dir)
         self._lineage_log = LineageLog(spark, self.paths.lineage)
@@ -209,7 +211,6 @@ class BM25Query:
         spark.catalog.refreshByPath(self.paths.postings)
         spark.catalog.refreshByPath(self.paths.docs)
         spark.catalog.refreshByPath(self.paths.dictionary)
-        from go_dcp_elasticsearch_spark.index.builder import read_global_stats
         from go_dcp_elasticsearch_spark.index.segments import (
             list_segments,
             tombstone_ids,
@@ -246,25 +247,15 @@ class BM25Query:
         # stats AND the shard-label bound come from ONE read of the tiny
         # stats partials (every maintenance path keeps a partial per live
         # label, including delta-minted ones) — the old per-refresh docs
-        # metadata scan for max(shard) is gone. Legacy pre-v5 indexes
-        # fall back to the docs scan. Delta docs can carry labels whose
-        # stats write was lost to a crash (heals at fold) — their max is
-        # folded in from the (small) segment read when segments exist.
-        from go_dcp_elasticsearch_spark.fsutil import exists as _exists
+        # metadata scan for max(shard) is gone.
         from go_dcp_elasticsearch_spark.index.builder import (
             read_stats_partials,
             stats_from_partials,
         )
 
-        if _exists(spark, self.paths.stats_shards):
-            parts = read_stats_partials(spark, self.paths)
-            self.n_docs, self.avgdl = stats_from_partials(parts)
-            max_label = max(parts, default=0)
-        else:
-            self.n_docs, self.avgdl = read_global_stats(spark, self.paths)
-            max_label = int(
-                spark.read.parquet(self.paths.docs).agg(F.max("shard")).collect()[0][0]
-            )
+        parts = read_stats_partials(spark, self.paths)
+        self.n_docs, self.avgdl = stats_from_partials(parts)
+        max_label = max(parts, default=0)
         # the partials already cover every DELTA-minted label in every
         # non-crash state (each delta apply writes a partial per insert
         # shard), so no per-refresh segment scan for max(shard) is needed;
@@ -421,11 +412,15 @@ class BM25Query:
         the term — what makes incremental refresh O(delta)), plus the
         pending delta segments' contributions (exact for inserted docs;
         dead docs stay counted in the base partials until fold — the
-        Lucene docFreq semantics). Legacy single-table dictionaries
-        aggregate to themselves."""
+        Lucene docFreq semantics)."""
+        from go_dcp_elasticsearch_spark.index.builder import DICTIONARY_SCHEMA
         from go_dcp_elasticsearch_spark.index.segments import delta_df_frame
 
-        base = self.spark.read.parquet(self.paths.dictionary).select("term", "df")
+        base = (
+            self.spark.read.schema(DICTIONARY_SCHEMA)
+            .parquet(self.paths.dictionary)
+            .select("term", "df")
+        )
         extra = delta_df_frame(self.spark, self.paths, self._segs) if self._segs else None
         if extra is not None:
             base = base.unionByName(extra)
@@ -856,13 +851,6 @@ class BM25Query:
                 c = getattr(F.col(col), self._RANGE_OPS[op])(F.lit(v))
                 pred = c if pred is None else (pred & c)
         return pred
-
-    def _range_doc_ids(self, range_spec: dict) -> DataFrame:
-        """doc_ids of LIVE docs satisfying the range spec — a column-
-        pruned docs scan with the bounds pushed into parquet (row-group
-        min/max skipping), over the handle's pinned segment snapshot."""
-        view = self._docs_snapshot()
-        return view.filter(self._range_pred(range_spec)).select("doc_id")
 
     # ---------- boolean retrieval (ES bool query analogue) ----------
 

@@ -50,7 +50,11 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from go_dcp_elasticsearch_spark.index.builder import POSTINGS_SCHEMA, IndexPaths
+from go_dcp_elasticsearch_spark.index.builder import (
+    POSTINGS_SCHEMA,
+    IndexPaths,
+    read_index_meta,
+)
 
 # seg value used for base posting blocks when unioned with segment blocks
 # (segment ids are >= 0; kernels key decode caches by (term, seg, block_id))
@@ -404,6 +408,7 @@ def fold_segments(spark, index_dir: str) -> dict:
         write_file,
     )
 
+    read_index_meta(spark, index_dir)  # format gate, before any write
     paths = IndexPaths(index_dir)
     # completes a previously crashed fold commit, if any (via recovery);
     # if recovery was SKIPPED because another live session holds the

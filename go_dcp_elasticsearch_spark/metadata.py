@@ -17,8 +17,10 @@ checkpoint in the metadata bucket, connector.go:186):
                           when the live rec-file count passes
                           COMPACT_THRESHOLD so reads stay O(1) files, not
                           one round-trip per historical record.
-  <legacy>.jsonl          pre-round-4 appended log, read transparently
-                          and folded into the first checkpoint.
+
+Any other ``*.jsonl`` in the directory (the retired appended-log layout:
+``lineage.jsonl``, ``metrics.jsonl``, ``meta.jsonl``) is refused with a
+ValueError on every read and count: this layout is the only one read.
 
 Crash safety of compaction: the new checkpoint is durable BEFORE any
 superseded file is deleted; a crash mid-delete leaves duplicates, which
@@ -41,32 +43,33 @@ COMPACT_THRESHOLD = 256
 
 
 class RecordLog:
-    def __init__(self, spark, path: str, legacy_name: str | None = None):
+    def __init__(self, spark, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        self.legacy_name = legacy_name
         self._tag = uuid.uuid4().hex[:12]
         self._seq = 0
-        self._legacy_count: int | None = None
 
     # ---------- reads ----------
 
     def _names(self) -> list[str]:
         from go_dcp_elasticsearch_spark.fsutil import list_root_files
 
-        return list_root_files(self.spark, self.path)
+        names = list_root_files(self.spark, self.path)
+        for n in names:
+            if n.endswith(".jsonl") and not n.startswith("ckpt-"):
+                raise ValueError(
+                    f"record log {self.path}: {n} is an appended log of a "
+                    "retired layout; only rec-*.json records and ckpt-* "
+                    "checkpoints are read"
+                )
+        return names
 
     def _named_records(self, names: list[str]) -> list[tuple[str, dict]]:
         """(name, record) pairs, de-duplicated by name (first wins),
-        oldest source first: legacy log, checkpoints, live rec files."""
+        oldest source first: checkpoints, then live rec files."""
         from go_dcp_elasticsearch_spark.fsutil import read_file
 
         out: dict[str, dict] = {}
-        if self.legacy_name and self.legacy_name in names:
-            body = read_file(self.spark, f"{self.path}/{self.legacy_name}")
-            for i, line in enumerate(body.splitlines()):
-                if line.strip():
-                    out.setdefault(f"{self.legacy_name}:{i:08d}", json.loads(line))
         for name in sorted(n for n in names if n.startswith("ckpt-")):
             for line in read_file(self.spark, f"{self.path}/{name}").splitlines():
                 if line.strip():
@@ -82,27 +85,15 @@ class RecordLog:
 
     def count(self) -> int:
         """Cheap monotonic record count — ONE directory listing, no file
-        reads except a legacy log that has not been compacted yet. A
-        crash mid-compaction can briefly over-count (checkpoint total +
-        not-yet-deleted rec files); callers using this as an index epoch
-        just refresh once more."""
-        from go_dcp_elasticsearch_spark.fsutil import read_file
-
+        reads. A crash mid-compaction can briefly over-count (checkpoint
+        total + not-yet-deleted rec files); callers using this as an index
+        epoch just refresh once more."""
         names = self._names()
         total = max(
             (int(n.split("-")[1]) for n in names if n.startswith("ckpt-")),
             default=0,
         )
         total += sum(1 for n in names if n.startswith("rec-") and n.endswith(".json"))
-        if self.legacy_name and self.legacy_name in names:
-            # the legacy file is immutable until compaction deletes it:
-            # count its lines once per log instance, not per call (an
-            # epoch check runs per QUERY — re-reading a 10k-line file
-            # each time would be a full object GET on S3A)
-            if self._legacy_count is None:
-                body = read_file(self.spark, f"{self.path}/{self.legacy_name}")
-                self._legacy_count = sum(1 for line in body.splitlines() if line.strip())
-            total += self._legacy_count
         return total
 
     # ---------- writes ----------
@@ -110,13 +101,14 @@ class RecordLog:
     def append(self, rec: dict) -> None:
         from go_dcp_elasticsearch_spark.fsutil import write_file
 
-        self._seq += 1
-        write_file(
-            self.spark,
-            f"{self.path}/rec-{self._tag}-{self._seq:06d}.json",
-            json.dumps(rec),
-        )
+        # list BEFORE the write: a retired log is refused before any file
+        # lands in it, and the listing plus the new name is the
+        # compaction input
         names = self._names()
+        self._seq += 1
+        name = f"rec-{self._tag}-{self._seq:06d}.json"
+        write_file(self.spark, f"{self.path}/{name}", json.dumps(rec))
+        names.append(name)
         if sum(1 for n in names if n.startswith("rec-")) > COMPACT_THRESHOLD:
             self._compact(names)
 
@@ -133,10 +125,5 @@ class RecordLog:
         # the new checkpoint is durable; superseded files are now garbage
         # (crash mid-delete => duplicates, de-duplicated by name on read)
         for name in names:
-            if name == ckpt:
-                continue
-            if (
-                name.startswith(("rec-", "ckpt-"))
-                or (self.legacy_name and name == self.legacy_name)
-            ):
+            if name != ckpt and name.startswith(("rec-", "ckpt-")):
                 delete_dir(self.spark, f"{self.path}/{name}")

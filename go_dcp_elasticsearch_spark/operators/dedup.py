@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from go_dcp_elasticsearch_spark.functions.bm25 import round6_expr
-from go_dcp_elasticsearch_spark.functions.tokenizer import tokenize_expr
 
 
 def last_write_wins(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -57,11 +56,6 @@ def shingles_of_tokens(toks, n: int = 3):
         F.size(toks) >= n,
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def word_shingles(text_col: str, n: int = 3):
-    """Column expr: canonical tokens -> n-word shingles (joined by space)."""
-    return shingles_of_tokens(tokenize_expr(text_col), n)
 
 
 def minhash_band_buckets(

@@ -63,16 +63,6 @@ def md5_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return m
 
 
-def plane_sql(p: str, dim: int, seed: int = 42) -> str:
-    """DuckDB list<double> expression for plane ``p`` (a SQL fragment
-    evaluating md5_planes row p — same bytes, same signs)."""
-    return (
-        f"list_transform(range(0, {dim}), d -> CASE WHEN strpos('01234567', "
-        f"substr(md5('{seed}:' || CAST({p} AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)) > 0 "
-        f"THEN 1.0 ELSE -1.0 END)"
-    )
-
-
 def lsh_buckets(
     df: DataFrame,
     vec_col: str = "embedding",

@@ -17,14 +17,14 @@ instead of only on the driver's local disk (the reference likewise persists
 its checkpoint in the metadata bucket, connector.go:186), and a driver
 replacement keeps the log. Per-record files rather than an appended JSONL
 because append() is unsupported on S3A and other Hadoop filesystems.
-Still O(ms) per commit, not a Spark job. Legacy ``lineage.jsonl`` logs from
-older indexes are read transparently. ``read()`` exposes a DataFrame.
+Still O(ms) per commit, not a Spark job. A log directory holding the
+retired appended ``lineage.jsonl`` is refused (metadata.RecordLog); rebuild
+the index. ``read()`` exposes a DataFrame.
 """
 
 from __future__ import annotations
 
 import datetime
-import json
 import uuid
 
 from pyspark.sql import SparkSession
@@ -54,7 +54,7 @@ class LineageLog:
         self.spark = spark
         self.path = path.rstrip("/")
         self.run_id = uuid.uuid4().hex[:12]
-        self._log = RecordLog(spark, self.path, legacy_name="lineage.jsonl")
+        self._log = RecordLog(spark, self.path)
 
     def commit(self, stage: str, partition_id: int, rows_out: int) -> None:
         # one immutable file per record (metadata.RecordLog): durable and

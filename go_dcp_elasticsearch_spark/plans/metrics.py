@@ -7,7 +7,8 @@ metadata file per record through the Hadoop FS API (O(ms), control-plane
 facts next to the data on HDFS/S3A — see plans.lineage for the rationale);
 ``read()`` exposes them as a DataFrame and a dashboard is a groupBy away.
 ``record_counts`` takes a pre-aggregated DataFrame for distributed counting.
-Legacy appended ``metrics.jsonl`` logs are read transparently.
+A directory holding the retired appended ``metrics.jsonl`` is refused
+(metadata.RecordLog).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ class MetricsLog:
 
         self.spark = spark
         self.path = path.rstrip("/")
-        self._log = RecordLog(spark, self.path, legacy_name="metrics.jsonl")
+        self._log = RecordLog(spark, self.path)
 
     def record(
         self,

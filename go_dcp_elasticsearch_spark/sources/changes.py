@@ -216,56 +216,6 @@ def _assign_insert_ranks(inserts: DataFrame, key_cols: list[str], n_parts: int) 
     return out
 
 
-def _ensure_partials_layout(spark, b) -> None:
-    """One-time upgrade of a pre-v4 index to the per-shard partials layout
-    (global dictionary -> shard-partitioned (term, shard, df, cf);
-    stats_shards created from the docs table). O(index) ONCE on first
-    maintenance of an old index, after which every apply is O(delta)."""
-    from go_dcp_elasticsearch_spark.fsutil import exists
-
-    if not exists(spark, b.paths.dictionary):
-        legacy_dict = True  # no dictionary at all: (re)derive from postings
-    else:
-        # IO errors here must PROPAGATE: treating a transient read failure
-        # as "legacy" would delete a healthy dictionary and trigger an
-        # O(index) rebuild on a blip
-        legacy_dict = "shard" not in spark.read.parquet(
-            b.paths.dictionary
-        ).schema.fieldNames()
-    if legacy_dict:
-        from go_dcp_elasticsearch_spark.fsutil import delete_dir
-
-        # materialize the new partials BEFORE deleting the legacy table:
-        # the table being replaced is derived from POSTINGS, so the delete
-        # only guards against a dynamic-mode session conf leaving the old
-        # root-level files next to the new shard= directories (conflicting
-        # directory structures at read time)
-        new_dict = (
-            spark.read.parquet(b.paths.postings)
-            .groupBy("term", "shard")
-            .agg(F.sum("count").alias("df"), F.sum("tf_sum").alias("cf"))
-            .repartition(max(int(b.n_shards), 1), F.col("shard"))
-        )
-        delete_dir(spark, b.paths.dictionary)
-        new_dict.write.mode("overwrite").partitionBy("shard").parquet(
-            b.paths.dictionary
-        )
-        spark.catalog.refreshByPath(b.paths.dictionary)
-    if not exists(spark, b.paths.stats_shards):
-        from go_dcp_elasticsearch_spark.index.builder import write_stats_tables
-
-        rows = (
-            spark.read.parquet(f"{b.paths.root}/docs")
-            .groupBy("shard")
-            .agg(F.count("*").alias("n_docs"), F.sum("doc_len").alias("sum_dl"))
-            .collect()
-        )
-        write_stats_tables(
-            spark, b.paths,
-            {int(r["shard"]): (int(r["n_docs"]), int(r["sum_dl"])) for r in rows},
-        )
-
-
 def _rewrite_dictionary_partials(spark, b, shards: set[int]) -> None:
     """Re-derive the dictionary partials of exactly ``shards`` from the
     (already rewritten) postings partitions: clear those shards'
@@ -493,6 +443,8 @@ def apply_changes_to_index(
         POSTINGS_SCHEMA,
         IndexBuilder,
         IndexPaths,
+        posting_chunks_fixed_shard,
+        read_index_meta,
     )
     from go_dcp_elasticsearch_spark.index.segments import (
         fold_segments,
@@ -502,6 +454,7 @@ def apply_changes_to_index(
 
     if strategy not in ("rebuild", "delta", "auto"):
         raise ValueError(f"apply_changes_to_index: unknown strategy {strategy!r}")
+    meta = read_index_meta(spark, index_dir)  # format gate, before any write
     km_min = keymap_min_docs()
     trace = _phase_tracer("rebuild")
     key_cols = list(key_cols)
@@ -512,13 +465,12 @@ def apply_changes_to_index(
     if strategy == "auto":
         # scatter probe over the LIVE view (works with pending segments;
         # folding is only required once the rebuild path is chosen).
-        # Preferred shape (valid keymap + v5 stats partials): touched
+        # Preferred shape (valid keymap): touched
         # shards from a bucket-PRUNED keymap lookup and live shards from
         # the driver-side partials — ZERO full metadata scans. Fallback:
         # ONE job that broadcast-left-joins the (small) deduped feed onto
         # the view's (key, shard) projection and counts both distinct-
         # shard numbers together (the pre-r6 shape was two full scans).
-        from go_dcp_elasticsearch_spark.fsutil import exists as _exists
         from go_dcp_elasticsearch_spark.index import keymap as km_mod
         from go_dcp_elasticsearch_spark.index.builder import read_stats_partials
         from go_dcp_elasticsearch_spark.index.segments import recover_pending_fold
@@ -531,11 +483,7 @@ def apply_changes_to_index(
             spark, paths_probe, key_cols,
             LineageLog(spark, paths_probe.lineage).record_count(),
         )
-        if (
-            kmeta_probe is not None
-            and int(kmeta_probe["max_doc_id"]) + 1 >= km_min
-            and _exists(spark, paths_probe.stats_shards)
-        ):
+        if kmeta_probe is not None and int(kmeta_probe["max_doc_id"]) + 1 >= km_min:
             partials_probe = read_stats_partials(spark, paths_probe)
             n_live_probe = sum(1 for n, _ in partials_probe.values() if n > 0)
             touched = (
@@ -588,18 +536,17 @@ def apply_changes_to_index(
     )
     docs_path = f"{index_dir}/docs"
     docs = spark.read.parquet(docs_path)
-    # bounds: with a valid keymap + v5 stats partials, the id/label
+    # bounds: with a valid keymap and the stats partials, the id/label
     # authority comes from the keymap meta and the live-label count from
     # the (driver-side, n_shards-row) partials — ZERO metadata jobs (r7;
     # the keymap's max_doc_id may overestimate after a fold removed dead
     # ids, which is safe: ids must only never be REUSED, and an
     # overestimated max label only leaves a label hole). Fallback: the
     # one fused metadata-only aggregation job as before.
-    from go_dcp_elasticsearch_spark.fsutil import exists as _exists_fs
     from go_dcp_elasticsearch_spark.index.builder import read_stats_partials
 
     _bounds_partials = None
-    if kmeta is not None and _exists_fs(spark, _km_paths.stats_shards):
+    if kmeta is not None:
         _bounds_partials = read_stats_partials(spark, _km_paths)
     if _bounds_partials:
         max_label = int(kmeta["max_shard"])
@@ -671,7 +618,6 @@ def apply_changes_to_index(
     from go_dcp_elasticsearch_spark.index.builder import read_global_stats
 
     b = IndexBuilder(spark, index_dir, n_shards=max_label + 1)
-    _ensure_partials_layout(spark, b)  # one-time pre-v4 index upgrade
     n_docs_before, _ = read_global_stats(spark, b.paths)
 
     # inserts: on a routing-placed index (B5), each insert joins its
@@ -682,9 +628,6 @@ def apply_changes_to_index(
     # shards for n_inserts docs where target = current avg docs per LIVE
     # shard; each tail shard is one contiguous range of the new ids, no
     # untouched shard is rebuilt, and no single tail shard is skewed.
-    from go_dcp_elasticsearch_spark.index.builder import read_index_meta
-
-    meta = read_index_meta(spark, index_dir)
     routing_col = meta.get("routing_col")
     routing_mod = int(meta.get("routing_n_shards") or 0)
     field_cols = list(meta.get("field_cols") or [])
@@ -896,7 +839,7 @@ def apply_changes_to_index(
         chunks = shard_corpus.select(
             "doc_id", "content", "shard", *field_cols
         ).mapInPandas(
-            _chunks_with_fixed_shard(b, None, field_cols), schema=CHUNK_SCHEMA
+            posting_chunks_fixed_shard(field_cols=field_cols), schema=CHUNK_SCHEMA
         )
         # ONE salted-shard exchange (r7): the merge kernel groups by
         # (term, shard) within its partition, so repartitioning straight
@@ -911,7 +854,7 @@ def apply_changes_to_index(
 
         postings = chunks.repartition(
             max(len(rebuild_shards), 1), label_salt_expr(rebuild_shards)
-        ).mapInPandas(b._merge_chunks(None), schema=POSTINGS_SCHEMA)
+        ).mapInPandas(b._merge_chunks(), schema=POSTINGS_SCHEMA)
         postings.sortWithinPartitions(
             "term", "block_id"
         ).write.mode("overwrite").partitionBy("shard").parquet(b.paths.postings)
@@ -1133,8 +1076,6 @@ def _apply_changes_delta(
         max_id, max_label = int(bounds["mi"]), int(bounds["ms"])
     trace("bounds")
     b = IndexBuilder(spark, index_dir, n_shards=max_label + 1)
-    _ensure_partials_layout(spark, b)
-    trace("partials_layout")
 
     # persisted: the LWW dedup is a window/shuffle over the raw changes,
     # and without the persist it re-runs for every consumer (the keymap
@@ -1364,7 +1305,7 @@ def _apply_changes_delta(
         chunks = all_rows.filter(F.col("term") != DOC_SENTINEL)
         postings = chunks.repartition(
             n_merge, F.col("term"), F.col("shard")
-        ).mapInPandas(b._merge_chunks(None), schema=POSTINGS_SCHEMA)
+        ).mapInPandas(b._merge_chunks(), schema=POSTINGS_SCHEMA)
         # segment postings FIRST (invisible until the docs dir commits)
         postings.write.mode("overwrite").parquet(seg_postings_dir)
         trace("seg_postings_write")
@@ -1635,13 +1576,18 @@ def compact_index(
     from pyspark.sql import Window
 
     from go_dcp_elasticsearch_spark.index import keymap as km_mod
-    from go_dcp_elasticsearch_spark.index.builder import IndexBuilder, IndexPaths
+    from go_dcp_elasticsearch_spark.index.builder import (
+        IndexBuilder,
+        IndexPaths,
+        read_index_meta,
+    )
     from go_dcp_elasticsearch_spark.index.segments import (
         ensure_no_pending_fold,
         fold_segments,
         has_segments,
     )
 
+    read_index_meta(spark, index_dir)  # format gate, before any write
     # compaction relabels shards wholesale: every keymap placement goes
     # stale, so drop the cache up front (a crash mid-compact then leaves
     # it absent = invalid; the next delta apply rebuilds it)
@@ -1688,9 +1634,6 @@ def compact_index(
     summary = {"n_shards_before": n_before, "n_shards_after": n_before,
                "rewritten": [], "split": sorted(split_plan)}
     b = IndexBuilder(spark, index_dir, n_shards=n_before)
-    # one-time pre-v4 upgrade BEFORE any relabeling (the merge phase reads
-    # the source shards' stats partials, which must reflect pre-merge state)
-    _ensure_partials_layout(spark, b)
 
     if merged:
         remap_pairs = [(s, g[0]) for g in merged for s in g]
@@ -1951,7 +1894,6 @@ def _split_shards(spark, index_dir: str, b, split_plan: dict[int, int]) -> int:
     # partitions; stats partials (collected before the overwrite) are
     # folded into the tiny table driver-side. Global stats are invariant
     # under re-partitioning (write_stats_tables recomputes the same row).
-    # (compact_index already ran the pre-v4 layout upgrade.)
     from go_dcp_elasticsearch_spark.index.builder import (
         read_stats_partials,
         write_stats_tables,
@@ -1966,19 +1908,6 @@ def _split_shards(spark, index_dir: str, b, split_plan: dict[int, int]) -> int:
     pieced.unpersist()
     provisional.unpersist()
     return nxt - (max_label + 1)
-
-
-def _chunks_with_fixed_shard(builder, avgdl: float,
-                             field_cols: list[str] | None = None):
-    """Chunk kernel trusting the precomputed ``shard`` column (shard
-    assignments are preserved from the original build, so the range-shard
-    formula can't be reapplied after inserts). Shared with the builder's
-    routing-placement mode. ``field_cols``: keyword-field postings are
-    re-emitted for rebuilt docs (read from _meta, so incremental applies
-    keep the field namespace consistent with the original build)."""
-    from go_dcp_elasticsearch_spark.index.builder import posting_chunks_fixed_shard
-
-    return posting_chunks_fixed_shard(avgdl, field_cols=field_cols)
 
 
 def incremental_index_delta(

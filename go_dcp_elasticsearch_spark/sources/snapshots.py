@@ -20,8 +20,8 @@ Layout under ``store_dir`` (= the index dir, shared with the mirror):
   _snapshots/rec-*.json       commit log: one immutable metadata file per
                               snapshot, written through the Hadoop FS API
                               so it lives NEXT TO THE DATA on HDFS/S3A
-                              (O(ms), not a Spark job; legacy meta.jsonl
-                              logs are read transparently)
+                              (O(ms), not a Spark job; a retired
+                              appended meta.jsonl is refused)
   _corpus/                    the head-state mirror (write_corpus_mirror)
 
 Scale shape: ``read_changes_between`` reads ONLY the requested snapshot
@@ -30,8 +30,6 @@ doc key; ``commit`` rewrites only the mirror buckets the feed touches.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -55,7 +53,7 @@ class SnapshotStore:
         self.meta_dir = f"{self.store_dir}/_snapshots"
         from go_dcp_elasticsearch_spark.metadata import RecordLog
 
-        self._meta_log = RecordLog(spark, self.meta_dir, legacy_name="meta.jsonl")
+        self._meta_log = RecordLog(spark, self.meta_dir)
 
     # ---------- metadata ----------
 

@@ -147,49 +147,22 @@ def upsert_corpus_mirror(
     if not touched_buckets:
         return []
 
-    from go_dcp_elasticsearch_spark.fsutil import delete_dir, exists, rename
-
-    # crash recovery for an interrupted migration swap (see below): the
-    # mirror was renamed aside but the migrated copy never took its place
-    if not exists(spark, corpus_path) and exists(spark, f"{corpus_path}._premigrate"):
-        rename(spark, f"{corpus_path}._premigrate", corpus_path)
-        spark.catalog.refreshByPath(corpus_path)
-    elif exists(spark, corpus_path) and exists(spark, f"{corpus_path}._premigrate"):
-        # crash AFTER the staging->corpus rename but before the premigrate
-        # delete: the live mirror is the migrated copy, so the stale
-        # pre-migration snapshot is garbage by construction — remove it
-        # now, or a much later loss of corpus_path would "recover" ancient
-        # data over the live mirror via the branch above
-        delete_dir(spark, f"{corpus_path}._premigrate")
+    from go_dcp_elasticsearch_spark.fsutil import delete_dir
 
     # merge the touched buckets: survivors keep content, upserts win.
     old = spark.read.parquet(corpus_path).filter(
         F.col("_bucket").isin(touched_buckets)
     )
-    if "seq_no" in old.columns:
-        # migrate pre-round-3 mirrors whose bootstrap wrote int32 seq_no:
-        # rewriting SOME buckets as int64 would leave a mixed-type parquet
-        # table that fails at read — normalize the WHOLE mirror once. The
-        # mirror is the content AUTHORITY (bootstrap state is not in any
-        # changelog), so the rewrite must not overwrite in place: write to
-        # a staging dir, swap via two renames, delete the old copy last.
-        # Crash windows: before the first rename -> nothing changed (the
-        # orphan staging dir is overwritten next time); between the
-        # renames -> the recovery branch above restores the original.
-        if dict(old.dtypes).get("seq_no") != "bigint":
-            staging = f"{corpus_path}._migrating"
-            spark.read.parquet(corpus_path).withColumn(
-                "seq_no", F.col("seq_no").cast("long")
-            ).repartition(n_buckets, F.col("_bucket")).write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(staging)
-            rename(spark, corpus_path, f"{corpus_path}._premigrate")
-            rename(spark, staging, corpus_path)
-            delete_dir(spark, f"{corpus_path}._premigrate")
-            spark.catalog.refreshByPath(corpus_path)
-            old = spark.read.parquet(corpus_path).filter(
-                F.col("_bucket").isin(touched_buckets)
-            )
+    # the mirror's seq_no is 64-bit (write_corpus_mirror casts the
+    # bootstrap): rewriting some buckets as int64 next to int32 files would
+    # leave a table that fails at read, so any other type is refused
+    # before the first write (dtypes are already resolved: no extra job)
+    seq_type = dict(old.dtypes).get("seq_no", "bigint")
+    if seq_type != "bigint":
+        raise ValueError(
+            f"corpus mirror {corpus_path}: seq_no is {seq_type}, expected "
+            "bigint; re-bootstrap it with write_corpus_mirror"
+        )
     # no broadcast hint on the feed keys: a bulk re-ingest snapshot can
     # carry millions of keys; let AQE broadcast only when it actually fits
     survivors = old.join(feed.select(*key_cols), key_cols, "left_anti")

@@ -284,7 +284,7 @@ def test_merge_chunks_densify_sorts_overlapping_ranges():
     pdf = pd.DataFrame([chunk_row([3, 50], [2, 1], [9, 11]),
                         chunk_row([10], [5], [7])], columns=cols)
     b = IndexBuilder.__new__(IndexBuilder)
-    out = pd.concat(list(b._merge_chunks(avgdl)(iter([pdf]))), ignore_index=True)
+    out = pd.concat(list(b._merge_chunks()(iter([pdf]))), ignore_index=True)
     assert len(out) == 1  # densified into one block
     ids = np.cumsum(varbyte_decode(bytes(out["ids_vb"].iloc[0])), dtype=np.uint64)
     assert ids.tolist() == [3, 10, 50]
@@ -579,11 +579,20 @@ def test_apply_to_empty_index_raises_clear_error(spark, tmp_path):
     """Round-4 guard: an incremental apply over an index whose docs table
     is empty has no id/shard authority to extend — it must raise a clear
     error, not a NoneType crash from the bounds collect."""
+    import json
+    import os
+
     import pytest
 
+    from go_dcp_elasticsearch_spark.index.builder import INDEX_FORMAT_VERSION
     from go_dcp_elasticsearch_spark.sources.changes import apply_changes_to_index
 
     idx = str(tmp_path / "idx_empty")
+    # a current-format _meta so the apply passes the format gate and
+    # reaches the empty-docs check
+    os.makedirs(f"{idx}/_meta")
+    with open(f"{idx}/_meta/index.json", "w") as f:
+        json.dump({"format_version": INDEX_FORMAT_VERSION}, f)
     # readable-but-empty docs table (schema-only parquet; a partitioned
     # empty write would produce no files at all and fail at read instead)
     spark.createDataFrame(
@@ -902,109 +911,6 @@ def test_tokenless_update_leaves_no_ghost_postings(spark, tmp_path):
     assert vout["sha_mismatch"] == 0 and vout["missing_in_index"] == 0
     assert vout["extra_in_index"] == 0
     assert read_global_stats(spark, IndexPaths(idx))[0] == 60 - len(doomed)
-
-
-def test_pre_v4_index_upgrades_in_place(spark, tmp_path):
-    """Cross-version integration: a pre-round-4 index (GLOBAL unpartitioned
-    dictionary, single-row stats table, no stats_shards/_meta, appended
-    lineage.jsonl) must upgrade in place on first maintenance — queries
-    work before AND after, the one-time migration builds the partials
-    layout, and a subsequent compact keeps everything consistent."""
-    import json as _json
-    import os
-    import shutil
-
-    from go_dcp_elasticsearch_spark.corpus import synth_corpus
-    from go_dcp_elasticsearch_spark.index import BM25Query, IndexBuilder
-    from go_dcp_elasticsearch_spark.index.builder import (
-        IndexPaths,
-        global_dictionary,
-        read_global_stats,
-    )
-    from go_dcp_elasticsearch_spark.sources.changes import (
-        apply_changes_to_index,
-        compact_index,
-    )
-    from pyspark.sql import functions as F
-
-    idx = str(tmp_path / "idx_legacyfmt")
-    corpus = synth_corpus(spark, 150)
-    IndexBuilder(spark, idx, n_shards=3).build(corpus)
-
-    # ---- transform to the legacy (v3) on-disk layout ----
-    # 1. global unpartitioned dictionary
-    gd = global_dictionary(spark, idx).collect()
-    shutil.rmtree(f"{idx}/dictionary")
-    spark.createDataFrame(
-        [(r["term"], int(r["df"]), int(r["cf"])) for r in gd],
-        "term string, df long, cf long",
-    ).coalesce(1).write.parquet(f"{idx}/dictionary")
-    # 2. single-row stats table, no stats_shards
-    n0, avg0 = read_global_stats(spark, IndexPaths(idx))
-    shutil.rmtree(f"{idx}/stats_shards")
-    shutil.rmtree(f"{idx}/stats", ignore_errors=True)
-    spark.createDataFrame(
-        [(n0, float(avg0), "default")],
-        "n_docs long, avgdl double, index_name string",
-    ).coalesce(1).write.parquet(f"{idx}/stats")
-    # 3. appended jsonl logs instead of per-record files; no _meta
-    for d, legacy in (("_lineage", "lineage.jsonl"), ("_metrics", "metrics.jsonl")):
-        p = f"{idx}/{d}"
-        recs = []
-        for fn in sorted(os.listdir(p)):
-            if fn.startswith("rec-"):
-                recs.append(open(os.path.join(p, fn)).read().strip())
-            if not fn.startswith("."):
-                os.remove(os.path.join(p, fn))
-        with open(f"{p}/{legacy}", "w") as f:
-            f.write("\n".join(recs) + "\n")
-    shutil.rmtree(f"{idx}/_meta", ignore_errors=True)
-    spark.catalog.refreshByPath(f"{idx}/dictionary")
-
-    # legacy index queries correctly through the current code
-    q = BM25Query(spark, idx)
-    assert q.n_docs == 150
-    base = [int(r["doc_id"]) for r in q.topk_pruned("getValue buffer", 10).collect()]
-    assert base
-
-    # ---- first maintenance triggers the one-time upgrade ----
-    victim = spark.read.parquet(f"{idx}/docs").orderBy("doc_id").limit(1).collect()[0]
-    key = (victim["repo"], victim["path"])
-    new_corpus = corpus.withColumn(
-        "content",
-        F.when(
-            (F.col("repo") == key[0]) & (F.col("path") == key[1]),
-            F.lit("zzqlegacyfmt upgraded buffer"),
-        ).otherwise(F.col("content")),
-    )
-    out = apply_changes_to_index(
-        spark, idx, new_corpus,
-        spark.createDataFrame(
-            [(key[0], key[1], "index", 900)],
-            "repo string, path string, action string, seq_no long",
-        ),
-    )
-    assert out["n_docs"] == 150
-    # v4/v5 layout now in place
-    assert os.path.isdir(f"{idx}/stats_shards")
-    assert any(d.startswith("shard=") for d in os.listdir(f"{idx}/dictionary"))
-    # epoch auto-refresh: the held handle serves the new content
-    hits = q.with_meta(q.topk_pruned("zzqlegacyfmt", 5)).collect()
-    assert [(r["repo"], r["path"]) for r in hits] == [key]
-    # dictionary consistency: global view == postings truth
-    post_df = {
-        r["term"]: int(r["df"])
-        for r in spark.read.parquet(f"{idx}/postings")
-        .groupBy("term").agg(F.sum("count").alias("df")).collect()
-    }
-    dict_df = {r["term"]: int(r["df"]) for r in global_dictionary(spark, idx).collect()}
-    assert dict_df == post_df
-
-    # ---- compact on the upgraded index stays consistent ----
-    compact_index(spark, idx, target_docs_per_shard=10_000)
-    assert read_global_stats(spark, IndexPaths(idx))[0] == 150
-    hits = q.with_meta(q.topk_pruned("zzqlegacyfmt", 5)).collect()
-    assert [(r["repo"], r["path"]) for r in hits] == [key]
 
 
 def test_split_tokenless_piece_leaves_no_ghost_postings(spark, tmp_path):

@@ -126,19 +126,11 @@ def test_record_log_compaction(spark, tmp_index_dir, monkeypatch):
     """Review r4: per-record metadata files must not grow one-file-per-
     commit forever — past COMPACT_THRESHOLD they fold into a checkpoint
     (total carried in the file name so count() stays one listing), with
-    records()/count() identical across the compaction and legacy lines
-    folded in."""
+    records()/count() identical across the compaction."""
     import go_dcp_elasticsearch_spark.metadata as md
 
     monkeypatch.setattr(md, "COMPACT_THRESHOLD", 10)
     path = f"{tmp_index_dir}/_lineage"
-    # seed a legacy appended log (pre-round-4 layout)
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/lineage.jsonl", "w") as f:
-        for i in range(3):
-            f.write(json.dumps({"stage": f"legacy{i}", "partition_id": i,
-                                "rows_out": 1, "run_id": "old",
-                                "committed_at": "t"}) + "\n")
     log = LineageLog(spark, path)
     for i in range(25):
         log.commit(f"s{i}", i, 1)
@@ -147,16 +139,40 @@ def test_record_log_compaction(spark, tmp_index_dir, monkeypatch):
     n_rec = sum(1 for n in names if n.startswith("rec-"))
     n_ckpt = sum(1 for n in names if n.startswith("ckpt-"))
     assert n_ckpt >= 1 and n_rec <= 10, names
-    assert "lineage.jsonl" not in names  # folded into the checkpoint
     stages = log.completed_stages()
-    assert {"legacy0", "legacy1", "legacy2"} <= stages
     assert {f"s{i}" for i in range(25)} <= stages
-    assert log.record_count() == 28
+    assert log.record_count() == 25
     # count stays monotone across a fresh reader and further commits
     log2 = LineageLog(spark, path)
-    assert log2.record_count() == 28
+    assert log2.record_count() == 25
     log2.commit("after", 99, 1)
-    assert log2.record_count() == 29
+    assert log2.record_count() == 26
+
+
+def test_record_log_refuses_appended_jsonl(spark, tmp_index_dir):
+    """The retired appended-log layout (``lineage.jsonl`` next to the
+    per-record files) is refused on every read, count and append, naming
+    the directory and the file; the append refuses before writing."""
+    import pytest
+
+    path = f"{tmp_index_dir}/_lineage"
+    log = LineageLog(spark, path)
+    log.commit("docs", 0, 1)
+    with open(f"{path}/lineage.jsonl", "w") as f:
+        f.write(json.dumps({"stage": "old", "partition_id": 0, "rows_out": 1,
+                            "run_id": "old", "committed_at": "t"}) + "\n")
+    before = sorted(os.listdir(path))
+    for call in (
+        lambda: LineageLog(spark, path).read(),
+        lambda: LineageLog(spark, path).completed_stages(),
+        log.record_count,
+        log._log.count,
+        lambda: log.commit("postings", 0, 1),
+    ):
+        with pytest.raises(ValueError, match="lineage.jsonl") as ei:
+            call()
+        assert path in str(ei.value)
+    assert sorted(os.listdir(path)) == before
 
 
 def test_record_log_crash_between_ckpt_and_deletes(spark, tmp_index_dir, monkeypatch):

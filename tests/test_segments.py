@@ -899,3 +899,60 @@ def test_fold_in_range_tombstone_leaves_other_terms_intact(spark, tmp_path):
     assert ids_of("bbstraddle") == [0, 2]
     # re-encode branch: the common term dropped exactly id 1
     assert ids_of("aacommon") == [i for i in range(30) if i != 1]
+
+
+def test_format_gate_refuses_before_any_write(spark, tmp_path):
+    """One on-disk format: an index whose _meta/index.json is missing or
+    carries another format_version is refused with a ValueError naming
+    the found and the expected version, at query open and at every
+    maintenance entry, before any file of the index is written."""
+    import hashlib
+    import json
+
+    from go_dcp_elasticsearch_spark.index.builder import INDEX_FORMAT_VERSION
+
+    idx, new_corpus, changes, *_ = _setup(spark, tmp_path, n=60, n_shards=2)
+    # a pending segment, so fold and compact would have work to write
+    apply_changes_to_index(spark, idx, new_corpus, changes, strategy="delta")
+    assert has_segments(spark, IndexPaths(idx))
+    meta_path = f"{idx}/_meta/index.json"
+    with open(meta_path) as f:
+        meta = json.load(f)
+
+    def listing():
+        out = []
+        for d, _, fs in os.walk(idx):
+            for name in fs:
+                p = os.path.join(d, name)
+                with open(p, "rb") as f:
+                    digest = hashlib.sha256(f.read()).hexdigest()
+                out.append((os.path.relpath(p, idx), os.stat(p).st_mtime_ns, digest))
+        return sorted(out)
+
+    entries = [
+        lambda: BM25Query(spark, idx),
+        lambda: apply_changes_to_index(spark, idx, new_corpus, changes),
+        lambda: apply_changes_to_index(
+            spark, idx, new_corpus, changes, strategy="delta"
+        ),
+        lambda: compact_index(spark, idx),
+        lambda: fold_segments(spark, idx),
+    ]
+    for found in ("none", "4"):
+        # the local FS checksum would reject a hand-edited file
+        crc = os.path.join(os.path.dirname(meta_path), ".index.json.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        if found == "none":
+            os.remove(meta_path)
+        else:
+            with open(meta_path, "w") as f:
+                json.dump({**meta, "format_version": int(found)}, f)
+        before = listing()
+        for entry in entries:
+            with pytest.raises(ValueError) as ei:
+                entry()
+            msg = str(ei.value)
+            assert f"version {found}, expected {INDEX_FORMAT_VERSION}" in msg, msg
+            assert idx in msg and "IndexBuilder.build" in msg, msg
+            assert listing() == before

@@ -208,31 +208,6 @@ def test_commit_retry_is_idempotent(spark, tmp_path):
     assert raw.filter(F.col("snapshot_id") == 1).count() == 1  # no duplicates
 
 
-def test_premigrate_orphan_cleaned(spark, tmp_path):
-    """A crash between the staging->corpus rename and the premigrate
-    delete orphans _corpus._premigrate while corpus_path is live; the next
-    upsert must remove the orphan (a much later corpus_path loss would
-    otherwise 'recover' ancient pre-migration data over the live mirror)."""
-    import os
-    import shutil
-
-    idx = str(tmp_path / "idx_orphan")
-    corpus = synth_corpus(spark, 20)
-    store = SnapshotStore(spark, idx)
-    store.bootstrap(corpus, n_buckets=2)
-    shutil.copytree(f"{idx}/_corpus", f"{idx}/_corpus._premigrate")
-    key = [
-        (r["repo"], r["path"])
-        for r in corpus.select("repo", "path").orderBy("repo", "path").limit(1).collect()
-    ][0]
-    store.commit(spark.createDataFrame(
-        [_change(key, "index", "zzqorphan buffer", 11)], CHANGE_SCHEMA
-    ))
-    assert not os.path.exists(f"{idx}/_corpus._premigrate")
-    head = {(r["repo"], r["path"]): r["content"] for r in store.corpus_at_head().collect()}
-    assert head[key] == "zzqorphan buffer"
-
-
 def test_deferred_apply_keeps_unapplied_inserts(spark, tmp_path):
     """Review regression (round 3): the mirror GC must not drop a
     committed-but-not-yet-APPLIED insert when a later commit touches the
@@ -267,26 +242,22 @@ def test_deferred_apply_keeps_unapplied_inserts(spark, tmp_path):
 
 
 def test_mirror_emptied_bucket_removed_and_int32_migrated(spark, tmp_path):
-    """(a) a bucket whose every key was deleted loses its partition dir
-    (the old dynamic-overwrite space leak); (b) a legacy mirror written
-    with int32 seq_no is normalized to long on first upsert instead of
-    producing a mixed-type parquet table."""
+    """A bucket whose every key was deleted loses its partition dir (the
+    old dynamic-overwrite space leak), and the mirror keeps its 64-bit
+    seq_no across the upsert. (An int32 mirror is refused, not migrated:
+    test_int32_seq_mirror_refused_before_write.)"""
     import os
 
     from go_dcp_elasticsearch_spark.streaming.pipeline import (
         _bucket_expr,
         upsert_corpus_mirror,
+        write_corpus_mirror,
     )
 
     idx = str(tmp_path / "idx_buckets")
     corpus = synth_corpus(spark, 40).limit(40)
-    # legacy layout: int32 seq_no written directly (pre-round-3 bootstrap)
     n_buckets = 2
-    corpus.withColumn("_bucket", _bucket_expr(["repo", "path"], n_buckets)) \
-        .write.partitionBy("_bucket").parquet(f"{idx}/_corpus")
-    spark.createDataFrame([(n_buckets,)], "n_buckets int").coalesce(1) \
-        .write.parquet(f"{idx}/_corpus_meta")
-    assert dict(spark.read.parquet(f"{idx}/_corpus").dtypes)["seq_no"] == "int"
+    write_corpus_mirror(spark, idx, corpus, n_buckets=n_buckets)
 
     # delete EVERY key of bucket 0, update one key of bucket 1
     keyed = corpus.withColumn("_b", _bucket_expr(["repo", "path"], n_buckets))
@@ -297,7 +268,7 @@ def test_mirror_emptied_bucket_removed_and_int32_migrated(spark, tmp_path):
     assert b0_keys, "fixture has no bucket-0 keys"
     feed = spark.createDataFrame(
         [(k[0], k[1], "delete", "c", "py", None, 100 + i) for i, k in enumerate(b0_keys)]
-        + [(b1_key[0], b1_key[1], "index", "c", "py", "migrated content", 999)],
+        + [(b1_key[0], b1_key[1], "index", "c", "py", "updated content", 999)],
         CHANGE_SCHEMA,
     )
     upsert_corpus_mirror(spark, idx, feed, ["repo", "path"])
@@ -306,8 +277,45 @@ def test_mirror_emptied_bucket_removed_and_int32_migrated(spark, tmp_path):
     mirror = spark.read.parquet(f"{idx}/_corpus")
     assert dict(mirror.dtypes)["seq_no"] == "bigint"
     rows = {(r["repo"], r["path"]): r["content"] for r in mirror.collect()}
-    assert rows[b1_key] == "migrated content"
+    assert rows[b1_key] == "updated content"
     assert all(k not in rows for k in b0_keys)
+
+
+def test_int32_seq_mirror_refused_before_write(spark, tmp_path):
+    """A mirror whose seq_no is int32 (the retired pre-bootstrap-cast
+    layout) is refused by upsert_corpus_mirror with a ValueError naming
+    the type, before anything under the index dir is written."""
+    import os
+
+    from go_dcp_elasticsearch_spark.streaming.pipeline import (
+        _bucket_expr,
+        upsert_corpus_mirror,
+    )
+
+    idx = str(tmp_path / "idx_int32")
+    corpus = synth_corpus(spark, 20)
+    n_buckets = 2
+    corpus.withColumn("_bucket", _bucket_expr(["repo", "path"], n_buckets)) \
+        .write.partitionBy("_bucket").parquet(f"{idx}/_corpus")
+    assert dict(spark.read.parquet(f"{idx}/_corpus").dtypes)["seq_no"] == "int"
+    key = corpus.select("repo", "path").limit(1).collect()[0]
+    feed = spark.createDataFrame(
+        [(key["repo"], key["path"], "index", "c", "py", "new content", 7)],
+        CHANGE_SCHEMA,
+    )
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), idx),
+             os.stat(os.path.join(d, f)).st_size,
+             os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(idx) for f in fs
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="seq_no is int, expected bigint"):
+        upsert_corpus_mirror(spark, idx, feed, ["repo", "path"], n_buckets=n_buckets)
+    assert listing() == before
 
 
 def test_store_metadata_via_hadoop_fs_uri(spark, tmp_path):
@@ -347,39 +355,6 @@ def test_store_metadata_via_hadoop_fs_uri(spark, tmp_path):
     assert any(f.startswith("rec-") for f in os.listdir(f"{local}/_snapshots"))
     assert any(f.startswith("rec-") for f in os.listdir(f"{local}/_lineage"))
     assert store.expire_snapshots(keep_after=1) == [1]
-
-
-def test_legacy_jsonl_metadata_still_read(spark, tmp_path):
-    """Pre-round-4 stores used appended meta.jsonl/lineage.jsonl logs;
-    they must keep reading, and new per-record commits coexist."""
-    import json as _json
-    import os
-
-    idx = str(tmp_path / "idx_legacy")
-    corpus = synth_corpus(spark, 30)
-    store = SnapshotStore(spark, idx)
-    store.bootstrap(corpus)
-    meta_dir = f"{idx}/_snapshots"
-    recs = []
-    # (skip the local filesystem's hidden .crc checksum files)
-    for fn in sorted(os.listdir(meta_dir)):
-        p = os.path.join(meta_dir, fn)
-        if fn.startswith("rec-"):
-            recs.append(open(p).read().strip())
-        os.remove(p)
-    with open(f"{meta_dir}/meta.jsonl", "w") as f:
-        f.write("\n".join(recs) + "\n")
-    assert store.current_snapshot_id() == 0
-    assert _json.loads(recs[0])["snapshot_id"] == 0
-
-    key = [
-        (r["repo"], r["path"])
-        for r in corpus.select("repo", "path").orderBy("repo", "path").limit(1).collect()
-    ][0]
-    assert store.commit(spark.createDataFrame(
-        [_change(key, "index", "zzqlegacy buffer", 11)], CHANGE_SCHEMA
-    )) == 1
-    assert store.current_snapshot_id() == 1  # legacy + new records merged
 
 
 def test_expire_snapshots_retention(spark, tmp_path):
